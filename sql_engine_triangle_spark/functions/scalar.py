@@ -46,16 +46,22 @@ def encode_enum(col: Column, mapping: dict[str, int], default: int = 0) -> Colum
 
 def yyyymm(col: Column) -> Column:
     """ClickHouse ``toYYYYMM`` (F4, 01-create-table.sql:72) — the
-    derived partition column used for monthly partition pruning."""
+    derived partition column used for monthly partition pruning. The
+    one definition of the transform: ``sources.ingest.month_col``
+    renders it as the directory text, and ``date_since`` derives its
+    pruning bound from it."""
     return F.date_format(col, "yyyyMM").cast("int")
 
 
 def best_effort_date(col: Column, formats: tuple[str, ...] = (
     "yyyy-MM-dd", "yyyy/MM/dd", "MM/dd/yyyy", "dd-MM-yyyy", "yyyyMMdd",
+    "yyyy-MM-dd HH:mm",
 )) -> Column:
     """``parseDateTimeBestEffortUS`` analog (F5, README.md:148):
     coalesce of try-parses across common formats; NULL if none match
-    (ingestion-only, tolerant by design)."""
+    (ingestion-only, tolerant by design). The reference's own
+    ``yyyy-MM-dd HH:mm`` strings come last, so no earlier parse
+    changes."""
     return F.coalesce(*[F.try_to_timestamp(col, F.lit(fmt)).cast("date") for fmt in formats])
 
 

@@ -15,6 +15,11 @@ deliberate, documented deviations:
    the lab's bare `ORDER BY cnt DESC LIMIT 10` is nondeterministic
    when two counties tie on count.
 
+The date filters are built with `sources.ingest.date_since`, so on a
+table partitioned by `month_col` each scan opens only the months the
+filter can match (the lab's `PARTITION BY toYYYYMM(date)` pruning);
+on a flat table they are the plain date predicates.
+
 Kept OUTSIDE the driver registry (the driver's sf dirs don't contain
 property_sales; the fixture is generated deterministically in tests)
 and differentially tested against DuckDB in
@@ -26,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sql_engine_triangle_spark.sources.ingest import date_since
 
 Q2_TOWNS = ["LONDON", "MANCHESTER", "BRISTOL", "BIRMINGHAM", "NOTTINGHAM"]
 
@@ -57,7 +64,7 @@ ORDER BY avg_price DESC, type
 def q1(spark: SparkSession, path: str) -> DataFrame:
     ps = load_property_sales(spark, path)
     return (
-        ps.filter(F.col("date") >= F.lit("2020-01-01").cast("date"))
+        ps.filter(date_since(ps, "2020-01-01"))
         .groupBy("type")
         .agg(
             F.count("*").alias("transactions"),
@@ -87,10 +94,7 @@ ORDER BY town, month
 def q2(spark: SparkSession, path: str) -> DataFrame:
     ps = load_property_sales(spark, path)
     return (
-        ps.filter(
-            F.col("town").isin(Q2_TOWNS)
-            & (F.col("date") >= F.lit("2020-01-01").cast("date"))
-        )
+        ps.filter(F.col("town").isin(Q2_TOWNS) & date_since(ps, "2020-01-01"))
         .groupBy(
             "town", F.date_trunc("month", F.col("date")).cast("date").alias("month")
         )
@@ -132,9 +136,8 @@ ORDER BY type, year
 
 
 def q3(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path).filter(
-        F.col("date") >= F.lit("2015-01-01").cast("date")
-    )
+    ps = load_property_sales(spark, path)
+    ps = ps.filter(date_since(ps, "2015-01-01"))
     yearly = ps.groupBy(F.year("date").alias("year"), "type").agg(
         F.avg("price").alias("avg_price_raw"),
         F.count("*").alias("transactions"),
@@ -194,10 +197,8 @@ ORDER BY p.county, p.type
 
 
 def q4(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path).filter(
-        F.col("county").isNotNull()
-        & (F.col("date") >= F.lit("2020-01-01").cast("date"))
-    )
+    ps = load_property_sales(spark, path)
+    ps = ps.filter(F.col("county").isNotNull() & date_since(ps, "2020-01-01"))
     top = (
         ps.groupBy("county")
         .agg(F.count("*").alias("cnt"))

@@ -10,6 +10,9 @@ Scale notes (100 TB target):
   irrelevant as long as it is high enough (set ~2-3x total cores).
 - AQE skew-join handling is enabled so skewed group/join keys are
   split at runtime instead of stalling a single task.
+- Partition directories are listed on the driver under a local
+  master (``parallelPartitionDiscovery.threshold``); on a cluster the
+  default parallel listing job stays.
 - Session timezone is pinned to UTC so timestamp semantics are stable
   across driver, executors, and the DuckDB oracle.
 """
@@ -63,6 +66,14 @@ def get_spark(
         # heap is reserved lazily).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    if master.startswith("local"):
+        # List partition directories on the driver: above this many
+        # paths Spark lists them with a job on the same task slots the
+        # queries need. Every read still lists, so appended or
+        # compacted files are seen by the next read.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000"
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -8,9 +8,17 @@ sink (the MergeTree ORDER BY/PARTITION BY analog,
 01-create-table.sql:70-73).
 
 Scale notes: the write is partitioned by a derived month column
-(partition pruning on date predicates) and sorted within partitions
-on the query keys (Parquet min/max page/rowgroup stats then act as
-the coarse "index" — SURVEY.md §2.11's B-tree mapping).
+(``month_col``, the lab's ``PARTITION BY toYYYYMM(date)``) and sorted
+within partitions on the query keys (Parquet min/max page/rowgroup
+stats then act as the coarse "index" — SURVEY.md §2.11's B-tree
+mapping).
+
+What prunes month partitions: only a filter built with ``date_since``,
+which adds the implied ``month >= toYYYYMM(day)`` conjunct beside
+``date >= day``; ``queries.reference_parity`` Q1-Q4 use it. Spark
+derives no partition filter from a predicate on ``date`` itself, so
+``Engine.sql`` text and every other date predicate (``<``, ``=``,
+``BETWEEN``, ...) still open every partition.
 """
 
 from __future__ import annotations
@@ -21,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from sql_engine_triangle_spark.functions.scalar import best_effort_date, decode_enum
+from sql_engine_triangle_spark.functions.scalar import best_effort_date, decode_enum, yyyymm
 
 
 def raw_string_schema(columns: list[str]) -> StructType:
@@ -139,8 +147,23 @@ def typed_projection(raw: DataFrame) -> DataFrame:
 
 
 def month_col(date: Column) -> Column:
-    """Derived partition column (toYYYYMM, 01-create-table.sql:72)."""
-    return F.date_format(date, "yyyyMM").alias("month")
+    """Derived partition column (toYYYYMM, 01-create-table.sql:72),
+    as the string the directory name carries (``month=202001``)."""
+    return yyyymm(date).cast("string").alias("month")
+
+
+def date_since(df: DataFrame, day: str) -> Column:
+    """``date >= day`` on ``df``, plus the implied ``month >=
+    toYYYYMM(day)`` when ``df`` carries month_col's ``month`` column,
+    so a read of a month-partitioned table opens only the partitions
+    from that month on. The implied conjunct drops no row the date
+    predicate keeps: toYYYYMM is monotone in the date, and a NULL date
+    (partition ``__HIVE_DEFAULT_PARTITION__``) fails both."""
+    start = F.lit(day).cast("date")
+    cond = F.col("date") >= start
+    if "month" in df.columns:
+        cond = cond & (F.col("month") >= yyyymm(start))
+    return cond
 
 
 def write_partitioned(
@@ -152,10 +175,15 @@ def write_partitioned(
 ) -> None:
     """S4 sink: Hive-style monthly partitions + within-partition sort
     (MergeTree ORDER BY analog — gives Parquet min/max stats
-    selectivity on the sort keys)."""
+    selectivity on the sort keys). The sort leads with the partition
+    column: a partitioned write needs its input ordered by it, and
+    without that prefix Spark plans its own sort on ``partition_col``
+    and drops this one, leaving the files unsorted on ``sort_cols``."""
     out = df
     if sort_cols:
-        out = out.repartition(F.col(partition_col)).sortWithinPartitions(*sort_cols)
+        out = out.repartition(F.col(partition_col)).sortWithinPartitions(
+            partition_col, *sort_cols
+        )
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 

@@ -5,11 +5,14 @@ pruned read-back. Plus introspection helpers (S10-S11)."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from sql_engine_triangle_spark.functions.scalar import best_effort_date
 from sql_engine_triangle_spark.sources import ingest, introspect
 
 RAW_COLS = [
@@ -78,6 +81,31 @@ def test_typed_projection_semantics(spark, csv_path):
     assert rows["5"].type == "X"
 
 
+def test_best_effort_date_parses_the_reference_format(spark):
+    """The reference CSV's ``yyyy-MM-dd HH:mm`` strings parse to their
+    day; the earlier formats parse as before, and junk stays NULL."""
+    df = spark.createDataFrame(
+        [("2021-03-15 00:00",), ("2019-12-31 23:59",), ("2021-03-15",),
+         ("2020/06/18",), ("2021-03-15 25:00",), ("notadate",)],
+        "time string",
+    )
+    got = [str(r.d) for r in df.select(best_effort_date(F.col("time")).alias("d")).collect()]
+    assert got == ["2021-03-15", "2019-12-31", "2021-03-15", "2020-06-18", "None", "None"]
+
+
+def test_month_col_is_yyyymm_as_directory_text(spark):
+    """month_col (scalar.yyyymm as text) names the same partition
+    directories as the ``yyyyMM`` date format, and NULL for a NULL
+    date."""
+    df = spark.range(0, 12_000, 7).select(
+        F.date_add(F.lit("1995-01-01").cast("date"), F.col("id").cast("int")).alias("date")
+    ).union(spark.createDataFrame([(None,)], "date date"))
+    bad = df.filter(
+        ~ingest.month_col(F.col("date")).eqNullSafe(F.date_format("date", "yyyyMM"))
+    )
+    assert bad.count() == 0
+
+
 def test_typed_projection_survives_spaceless_postcode(spark):
     """Regression (r7 array-fuzzer finding): under ANSI — the Spark 4
     / driver default — element_at THROWS on an out-of-range index, so
@@ -109,11 +137,20 @@ def test_partitioned_sorted_write_and_pruned_read(spark, csv_path, tmp_path):
         ingest.enforce_bad_row_budget(raw, ingest.BadRowBudget())
     ).withColumn("month", ingest.month_col(F.col("date")))
     out = str(tmp_path / "pp_parquet")
-    ingest.write_partitioned(typed, out, sort_cols=["postcode1", "postcode2"])
+    sort_cols = ["postcode1", "postcode2"]
+    ingest.write_partitioned(typed, out, sort_cols=sort_cols)
 
     # Hive-style month partitions on disk.
     parts = {d for d in os.listdir(out) if d.startswith("month=")}
     assert {"month=202103", "month=202011", "month=202006", "month=202107"} == parts
+
+    # Every written file is sorted by sort_cols (month=202103 holds
+    # two rows that arrive out of postcode order).
+    files = glob.glob(os.path.join(out, "month=*", "*.parquet"))
+    assert len(files) == 4
+    for f in files:
+        keys = list(zip(*pq.read_table(f, columns=sort_cols).to_pydict().values()))
+        assert keys == sorted(keys), f
 
     back = spark.read.parquet(out)
     assert back.count() == 5

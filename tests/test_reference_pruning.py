@@ -1,0 +1,144 @@
+"""Month-partition pruning of the lab's Q1-Q4 over a table written
+the way the lab's ClickHouse table is laid out (``PARTITION BY
+toYYYYMM(date)``): one Hive partition per month, 372 of them.
+
+Pins the plan (every scan carries a ``month`` partition filter), the
+cost of building a query frame (partition directories listed on the
+driver, so at most one Spark job: the schema read), and exactness
+against DuckDB on date boundaries, a NULL date and a read right after
+an append."""
+
+from __future__ import annotations
+
+import os
+import re
+import shutil
+from datetime import date
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from sql_engine_triangle_spark.fixtures import generate as G
+from sql_engine_triangle_spark.plans.asserts import executed_plan
+from sql_engine_triangle_spark.queries import reference_parity as rp
+from sql_engine_triangle_spark.sources.ingest import month_col, write_partitioned
+from tests.conftest import assert_frames_match
+
+N_ROWS = 20_000
+SEED = 11
+SORT_COLS = ["postcode1", "postcode2", "addr1", "addr2"]
+QUERIES = {
+    "q1": (rp.q1, rp.Q1_SQL, 202001),
+    "q2": (rp.q2, rp.Q2_SQL, 202001),
+    "q3": (rp.q3, rp.Q3_SQL, 201501),
+    "q4": (rp.q4, rp.Q4_SQL, 202001),
+}
+# Each side of both filter bounds (2015-01-01 and 2020-01-01), and a
+# NULL date, which lands in __HIVE_DEFAULT_PARTITION__.
+BOUNDARY_DAYS = [
+    date(2014, 12, 31), date(2015, 1, 1), date(2019, 12, 31), date(2020, 1, 1), None,
+]
+
+
+def _boundary_rows(spark, price: int, days=BOUNDARY_DAYS):
+    rows = [
+        (price + i, day, "AB1", "2CD", typ, False, "freehold", str(i), "",
+         "LONDON ST ", "", "LONDON", "D1", county)
+        for i, day in enumerate(days)
+        for typ, county in (("detached", "GREATER LONDON"), ("flat", None))
+    ]
+    return spark.createDataFrame(rows, G.property_sales(spark, 1, SEED).schema)
+
+
+def _monthly(df):
+    return df.withColumn("month", month_col(F.col("date")))
+
+
+@pytest.fixture(scope="module")
+def monthly_table(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ref_monthly") / "property_sales")
+    sales = G.property_sales(spark, N_ROWS, SEED).unionByName(_boundary_rows(spark, 100_000))
+    write_partitioned(_monthly(sales), path, sort_cols=SORT_COLS)
+    return path
+
+
+def _duckdb_rows(path: str, sql: str):
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW property_sales AS SELECT * FROM "
+            f"read_parquet('{path}/*/*.parquet', hive_partitioning = true)"
+        )
+        return con.execute(sql).fetchdf()
+    finally:
+        con.close()
+
+
+def _file_scans(df) -> list[str]:
+    return [ln for ln in executed_plan(df).splitlines() if "FileScan parquet" in ln]
+
+
+def test_fixture_has_more_partitions_than_the_listing_threshold(monthly_table):
+    parts = [d for d in os.listdir(monthly_table) if d.startswith("month=")]
+    # 1995-01..2025-12 plus the NULL-date partition; Spark's default
+    # parallel-listing threshold is 32.
+    assert len(parts) == 373
+    assert "month=__HIVE_DEFAULT_PARTITION__" in parts
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_every_scan_prunes_month_partitions(spark, monthly_table, name):
+    fn, _, first_month = QUERIES[name]
+    scans = _file_scans(fn(spark, monthly_table))
+    assert len(scans) == (2 if name == "q4" else 1), scans
+    for scan in scans:
+        m = re.search(r"PartitionFilters: \[(.*?)\]", scan)
+        assert m and re.search(rf"month#\d+ >= {first_month}\b", m.group(1)), scan
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_building_a_query_runs_at_most_one_job(spark, monthly_table, name):
+    fn = QUERIES[name][0]
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, monthly_table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_duckdb_parity_on_month_partitions(spark, monthly_table, name):
+    fn, sql, _ = QUERIES[name]
+    assert_frames_match(fn(spark, monthly_table).toPandas(), _duckdb_rows(monthly_table, sql))
+
+
+def test_flat_table_runs_unpruned_with_the_same_answers(spark, monthly_table, tmp_path):
+    flat = str(tmp_path / "flat")
+    spark.read.parquet(monthly_table).drop("month").write.parquet(flat)
+    for name, (fn, _, _) in QUERIES.items():
+        df = fn(spark, flat)
+        assert all("month" not in scan for scan in _file_scans(df)), name
+        assert_frames_match(df.toPandas(), fn(spark, monthly_table).toPandas())
+
+
+def test_append_is_visible_to_the_next_read(spark, monthly_table, tmp_path):
+    """Partitions are listed on every read, with no cache: rows
+    appended to existing months and to a new one are in the next
+    answer of the same session."""
+    path = str(tmp_path / "property_sales")
+    shutil.copytree(monthly_table, path)
+    before = rp.q1(spark, path).agg(F.sum("transactions")).head()[0]
+
+    added = _boundary_rows(spark, 200_000).unionByName(
+        _boundary_rows(spark, 300_000, [date(2026, 2, 1)] * 5)
+    )
+    write_partitioned(_monthly(added), path, sort_cols=SORT_COLS, mode="append")
+
+    # 2 rows on 2020-01-01 and 10 in 2026-02 pass the Q1 filter.
+    assert rp.q1(spark, path).agg(F.sum("transactions")).head()[0] == before + 12
+    for name, (fn, sql, _) in QUERIES.items():
+        assert_frames_match(fn(spark, path).toPandas(), _duckdb_rows(path, sql))
