@@ -84,7 +84,10 @@ def checkpoint_all(
     if not dfs:
         return []
     flags = disk_only or (False,) * len(dfs)
-    assert len(flags) == len(dfs)
+    if len(flags) != len(dfs):
+        raise ValueError(
+            f"disk_only has {len(flags)} flags for {len(dfs)} frames"
+        )
 
     def _ckpt(pair):
         df, disk = pair

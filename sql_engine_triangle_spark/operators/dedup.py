@@ -160,11 +160,21 @@ def _minhash_min_cols(num_perms: int) -> list:
     rnd = random.Random(42)
     A = [rnd.randrange(1, 65_521) for _ in range(num_perms)]
     B = [rnd.randrange(0, M) for _ in range(num_perms)]
-    base = F.pmod(F.xxhash64(F.col("s")), F.lit(M))
+    # SQL text, one JVM call per column: the Column-API form made ~8
+    # py4j round trips per minimum. Same tree, same INT literal types.
+    base = f"pmod(xxhash64(s), {M})"
     return [
-        F.min(F.pmod(F.lit(A[p]) * base + F.lit(B[p]), F.lit(M))).alias(f"m{p}")
+        F.expr(f"min(pmod({A[p]} * {base} + {B[p]}, {M})) AS m{p}")
         for p in range(num_perms)
     ]
+
+
+def _sig_col(num_perms: int):
+    """``array(m0, ..., m{num_perms-1}) AS sig`` over the minima of
+    ``_minhash_min_cols``, built in one JVM call."""
+    return F.expr(
+        "array(" + ", ".join(f"m{p}" for p in range(num_perms)) + ") AS sig"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -260,10 +270,7 @@ def lsh_index_side(
     num_perms = bands * rows
     ex = shingle_rows(docs, id_col, text_col, n)
     sig_agg = ex.groupBy("doc_id").agg(*_minhash_min_cols(num_perms))
-    sigs = sig_agg.select(
-        "doc_id",
-        F.array(*[F.col(f"m{p}") for p in range(num_perms)]).alias("sig"),
-    )
+    sigs = sig_agg.select("doc_id", _sig_col(num_perms))
     banded = sigs.select(
         "doc_id", F.posexplode(_band_keys_expr(bands, rows)).alias("band", "bucket")
     )
@@ -385,8 +392,7 @@ def minhash_signatures(
     hashes (see _minhash_min_cols)."""
     exploded = shingle_rows(docs, id_col, text_col, n)
     per_doc = exploded.groupBy("doc_id").agg(*_minhash_min_cols(num_perms))
-    sig = F.array(*[F.col(f"m{p}") for p in range(num_perms)])
-    return per_doc.select("doc_id", sig.alias("sig"))
+    return per_doc.select("doc_id", _sig_col(num_perms))
 
 
 def _band_keys_expr(bands: int, rows: int):
@@ -459,9 +465,7 @@ def minhash_lsh_pairs(
     # (r11 optimization round, measured in the *_before plan: nodes
     # (1-9)/(10-18) duplicated). eager=False defers materialization
     # to the first action, so plan construction stays job-free.
-    sigs = sig_agg.select(
-        "doc_id", F.array(*[F.col(f"m{p}") for p in range(num_perms)]).alias("sig")
-    )
+    sigs = sig_agg.select("doc_id", _sig_col(num_perms))
     if checkpoint_aggs:
         sigs = sigs.localCheckpoint(eager=False)
     band_keys = _band_keys_expr(bands, rows)

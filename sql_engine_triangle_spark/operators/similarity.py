@@ -16,6 +16,9 @@ DOUBLE[]) reproduces them bit-for-bit before rounding.
 
 from __future__ import annotations
 
+import math
+import numbers
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -30,6 +33,50 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    x = float(v)
+    if not math.isfinite(x):
+        raise ValueError(f"not a finite float: {x!r}")
+    return repr(x) + "D"
+
+
+def array_literal_sql(values) -> str:
+    """SQL text of an array literal of ``values``. Floats render as
+    ``repr(x) + "D"`` (a DOUBLE literal; ``repr`` round-trips every
+    finite double exactly), ints as integer literals (INT when they
+    fit, BIGINT otherwise) — the values and types ``F.lit`` gives.
+    NaN and ±inf raise ``ValueError``: they have no SQL literal.
+
+    Why text: ``F.array(*[F.lit(v) ...])`` costs several py4j round
+    trips per element on the driver, and a 64-wide vector literal in
+    every seed cosine made plan building socket-bound. One ``F.expr``
+    over this text is one JVM call; the parsed tree is the same."""
+    return "array(" + ", ".join(_sql_literal(v) for v in values) + ")"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """``_dot`` as SQL text: the same zip_with/aggregate fold, same
+    operand order, a ``0D`` seed."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+_EMB_SQL = "CAST(embedding AS ARRAY<DOUBLE>)"
+
+
+def query_cos_sim(qvec: list[float]) -> Column:
+    """``round(cosine(embedding as array<double>, q), 4) AS cos_sim``
+    against a literal query vector, built in one JVM call — the same
+    expression tree as ``cosine`` (so the same bits)."""
+    q = array_literal_sql(qvec)
+    cos = (
+        f"{_dot_sql(_EMB_SQL, q)} / "
+        f"(sqrt({_dot_sql(_EMB_SQL, _EMB_SQL)}) * sqrt({_dot_sql(q, q)}))"
+    )
+    return F.expr(f"round({cos}, 4) AS cos_sim")
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -86,12 +133,7 @@ def brute_force_topk(
     """Exact cosine top-k against a literal query vector. The plan is
     scan → narrow projection → TakeOrderedAndProject: at 100 TB this
     is one pass over the vectors with a per-task k-heap."""
-    q = F.array(*[F.lit(float(v)) for v in qvec])
-    scored = emb.select(
-        "vec_id",
-        "label",
-        F.round(cosine(_as_double(F.col("embedding")), q), 4).alias("cos_sim"),
-    )
+    scored = emb.select("vec_id", "label", query_cos_sim(qvec))
     if exclude_id is not None:
         scored = scored.filter(F.col("vec_id") != exclude_id)
     return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
@@ -360,14 +402,8 @@ def ivf_topk(
     )
     if exclude_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_id)
-    q = F.array(*[F.lit(float(v)) for v in qvec])
     return (
-        cand.select(
-            "vec_id",
-            "label",
-            "cid",
-            F.round(cosine(_as_double(F.col("embedding")), q), 4).alias("cos_sim"),
-        )
+        cand.select("vec_id", "label", "cid", query_cos_sim(qvec))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
@@ -396,14 +432,8 @@ def ann_topk(
     cand = bucketed.filter(F.col("bucket").isin(probe))
     if exclude_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_id)
-    q = F.array(*[F.lit(float(v)) for v in qvec])
     return (
-        cand.select(
-            "vec_id",
-            "label",
-            "bucket",
-            F.round(cosine(_as_double(F.col("embedding")), q), 4).alias("cos_sim"),
-        )
+        cand.select("vec_id", "label", "bucket", query_cos_sim(qvec))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
@@ -453,14 +483,11 @@ def seed_centroid_assign(emb: DataFrame, k: int | None = None) -> DataFrame:
     pipelines into whatever consumes it — the same shape FAISS-style
     IVF uses, minus the iterative refinement that a differential
     oracle cannot replay."""
-    import math
-
     if k is None:
         # Corpus-size-dependent cluster count (one metadata-cheap
         # count job); callers with a pre-computed n pass k explicitly.
         k = seed_k_for(emb.count())
     seeds = emb.orderBy("vec_id").limit(k).select("embedding").collect()
-    e = _as_double(F.col("embedding"))
 
     def _seed_norm(vals: list) -> float:
         # Sequential left-fold of v*v, exactly the order the JVM
@@ -473,27 +500,17 @@ def seed_centroid_assign(emb: DataFrame, k: int | None = None) -> DataFrame:
 
     # Row norm hoisted once per row (one fold) instead of recomputed
     # inside each of the k cosines (k folds); seed norms are plan-time
-    # literals. Same expression tree per cosine -> same 6-dp argmin.
-    cands = [
-        F.struct(
-            (
-                -F.round(
-                    cosine_hoisted(
-                        e,
-                        F.array(*[F.lit(float(v)) for v in row[0]]),
-                        F.col("_nrm"),
-                        F.lit(_seed_norm(row[0])),
-                    ),
-                    6,
-                )
-            ).alias("nc"),
-            F.lit(i).alias("sid"),
-        )
+    # literals. Each cosine is cosine_hoisted's tree,
+    # -round(dot / (_nrm * seed_norm), 6), and the k-way argmin is one
+    # SQL text, so building it is one JVM call (not ~200 per seed).
+    cands = ", ".join(
+        f"named_struct('nc', -round({_dot_sql(_EMB_SQL, array_literal_sql(row[0]))}"
+        f" / (_nrm * {_sql_literal(_seed_norm(row[0]))}), 6), 'sid', {i})"
         for i, row in enumerate(seeds)
-    ]
+    )
     return (
-        emb.withColumn("_nrm", row_norm(e))
-        .withColumn("cid", F.array_min(F.array(*cands))["sid"])
+        emb.withColumn("_nrm", row_norm(_as_double(F.col("embedding"))))
+        .withColumn("cid", F.expr(f"array_min(array({cands})).sid"))
         .drop("_nrm")
     )
 
@@ -691,7 +708,11 @@ def knn_join_arrow(
     return (
         asg.groupBy("cid")
         .applyInPandas(per_cluster, schema=out_schema)
-        .orderBy("vec_id", "rank")
+        # partition-local sort, as in text_quality_scores: a global
+        # orderBy adds a range exchange whose sampling job runs the
+        # Python kernel a second time; callers and oracles compare
+        # rows order-insensitively.
+        .sortWithinPartitions("vec_id", "rank")
     )
 
 
@@ -749,5 +770,5 @@ def semantic_dedup_arrow(
     return (
         asg.groupBy("cid")
         .applyInPandas(per_cluster, schema=out_schema)
-        .orderBy("vec_id")
+        .sortWithinPartitions("vec_id")  # see knn_join_arrow
     )

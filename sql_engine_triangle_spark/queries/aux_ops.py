@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_engine_triangle_spark.catalog import load_table
-from sql_engine_triangle_spark.functions.scalar import round_stable
+from sql_engine_triangle_spark.functions.scalar import round_stable, yyyymm
 from sql_engine_triangle_spark.queries.core import Q1_ORACLE, Q4_ORACLE
 from sql_engine_triangle_spark.queries.registry import register
 
@@ -600,7 +600,7 @@ def f_date_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy(
             F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
             F.year("o_orderdate").alias("yr"),
-            F.date_format("o_orderdate", "yyyyMM").alias("yyyymm"),
+            yyyymm(F.col("o_orderdate")).cast("string").alias("yyyymm"),
             F.col("o_orderdate").cast("date").alias("odate"),
         )
         .agg(F.count("*").alias("cnt"))

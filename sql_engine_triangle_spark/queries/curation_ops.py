@@ -588,7 +588,6 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qvec = similarity.query_vector(emb, 0)
-    q_arr = F.array(*[F.lit(float(v)) for v in qvec])
     # 4-dp rounding BEFORE the top-100 cut and the ranking, like
     # brute_force_topk: DuckDB's list_cosine_similarity sums in a
     # different order than the Spark fold, so a cosine within ~1 ULP
@@ -598,12 +597,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0)
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(
-                similarity.cosine(
-                    F.col("embedding").cast("array<double>"), q_arr
-                ),
-                4,
-            ).alias("cos_sim"),
+            similarity.query_cos_sim(qvec),
         )
         .orderBy(F.desc("cos_sim"), "doc_id")
         .limit(100)
@@ -1440,7 +1434,7 @@ def sim_hard_negatives_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         asg.groupBy("cid")
         .applyInPandas(per_cluster, schema=out_schema)
-        .orderBy("vec_id")
+        .sortWithinPartitions("vec_id")  # see similarity.knn_join_arrow
     )
 
 

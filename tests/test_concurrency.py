@@ -9,6 +9,7 @@ from __future__ import annotations
 import ast
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_engine_triangle_spark import concurrency
@@ -22,6 +23,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_empty_call_returns_empty_list():
     assert checkpoint_all() == []
+
+
+def test_mismatched_disk_only_flags_raise(spark):
+    frames = [spark.range(2), spark.range(3)]
+    with pytest.raises(ValueError, match="2 frames"):
+        checkpoint_all(*frames, disk_only=(True,))
 
 
 def test_single_frame_checkpointed(spark):

@@ -4,6 +4,7 @@ reference, ANN recall against brute force."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_engine_triangle_spark.catalog import load_table
@@ -246,6 +247,37 @@ def test_ivf_recall_vs_brute_force(spark):
     val = registry.get("sim_ivf_topk").fn(spark, SF_DIR).collect()
     assert {r.vec_id for r in val} == exact
     assert all(r.ivf_recall_ok and r.ivf_returned_k_ok for r in val)
+
+
+@pytest.mark.parametrize("seed, recall_ok", [(1559667568, False), (2, True)])
+def test_ivf_flags_match_direct_computation(spark, tmp_path, seed, recall_ok):
+    """sim_ivf_topk's flags equal a direct computation from
+    brute_force_topk and ivf_topk, on a 500-vector corpus whose IVF
+    top-10 holds only 6 of the exact 10 (recall FALSE) and on one
+    where recall holds."""
+    from sql_engine_triangle_spark.catalog import table_path
+    from sql_engine_triangle_spark.fixtures import generate as G
+    from sql_engine_triangle_spark.operators import similarity
+
+    sf_dir = str(tmp_path)
+    G.embeddings(spark, 500, seed=seed).write.parquet(table_path(sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
+    qvec = similarity.query_vector(emb, 0)
+    exact = [
+        r.vec_id
+        for r in similarity.brute_force_topk(emb, qvec, k=10, exclude_id=0).collect()
+    ]
+    ivf = [
+        r.vec_id
+        for r in similarity.ivf_topk(
+            emb, qvec, k=10, exclude_id=0, cache_key=sf_dir
+        ).collect()
+    ]
+    assert (len(set(exact) & set(ivf)) >= 7) is recall_ok
+    val = registry.get("sim_ivf_topk").fn(spark, sf_dir).collect()
+    assert [r.vec_id for r in val] == exact
+    assert all(r.ivf_recall_ok is recall_ok for r in val)
+    assert all(r.ivf_returned_k_ok is (len(ivf) == 10) for r in val)
 
 
 def test_lsh_ann_structural(spark):

@@ -73,7 +73,6 @@ ALLOWED_NESTED_LOOP = {
     "dedup_minhash_lsh_mid",
     "dedup_simhash_pairs",
     "sim_ann_lsh_topk",
-    "sim_ivf_topk",
     # ONE-ROW broadcast of the corpus-total scalar (the token budget)
     # onto the prefix-summed frame — bounded 1 × N by construction.
     "pipeline_token_budget",
@@ -298,6 +297,32 @@ def test_skew_salted_join_no_nested_loop(spark):
     plan = pa.executed_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_ivf_validation_form_has_no_nested_loop(spark):
+    """sim_ivf_topk's flags are expressions over the exact top-10 (the
+    IVF ids enter as a collected k-row parameter), so its plan joins
+    nothing: no broadcast flags frame, no nested loop."""
+    plan = pa.executed_plan(_q(spark, "sim_ivf_topk"))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+ARROW_KERNEL_ENTRIES = (
+    "sim_knn_join_arrow",
+    "dedup_semantic_arrow",
+    "sim_hard_negatives_arrow",
+)
+
+
+def test_arrow_kernels_have_no_range_exchange(spark):
+    """An Arrow kernel's output ends in a partition-local sort: a
+    global sort's range exchange samples its child first, which runs
+    the applyInPandas kernel a second time."""
+    for name in ARROW_KERNEL_ENTRIES:
+        plan = pa.executed_plan(_q(spark, name))
+        assert "FlatMapGroupsInPandas" in plan, name
+        assert "rangepartitioning" not in plan, name
 
 
 def test_kmeans_argmin_uses_window_group_limit(spark):
