@@ -22,6 +22,7 @@ sequentially.
 from __future__ import annotations
 
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
@@ -34,6 +35,8 @@ from pyspark.storagelevel import StorageLevel
 # jobs in flight is plenty"; 8 covers every current call site
 # without queueing).
 MAX_CONCURRENT_CHECKPOINTS = 8
+
+_CHECKPOINT_DIR_LOCK = threading.Lock()
 
 
 def scale_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -56,7 +59,9 @@ def scale_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
       executor loss — localCheckpoint blocks are unrecoverable
       (lineage is truncated), so on a real cluster one lost executor
       would otherwise fail the job (guide §5; SCALE.md
-      "bounded-vs-proportional" rule).
+      "bounded-vs-proportional" rule). Spark 4 writes the checkpoint
+      files in the job that computes the frame, so the lineage runs
+      once with no persist (pinned by tests/test_concurrency.py).
 
     BOUNDED per-doc aggregates (|docs|-row signature/shingle-set/
     fingerprint frames) deliberately keep the plain localCheckpoint
@@ -64,10 +69,21 @@ def scale_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     memory level is the faster read."""
     ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckdir:
-        sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(ckdir)
+        _use_checkpoint_dir(df.sparkSession.sparkContext, ckdir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def _use_checkpoint_dir(sc, ckdir: str) -> None:
+    """Point reliable checkpoints at ``ckdir`` unless they already
+    write under it: each ``setCheckpointDir`` makes a new directory
+    below ``ckdir``, and ``checkpoint_all`` calls from pool threads."""
+    path = sc._jvm.org.apache.hadoop.fs.Path(ckdir)
+    want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path).toString()
+    with _CHECKPOINT_DIR_LOCK:
+        current = sc.getCheckpointDir()
+        if current is None or current.rsplit("/", 1)[0] != want:
+            sc.setCheckpointDir(ckdir)
 
 
 def checkpoint_all(

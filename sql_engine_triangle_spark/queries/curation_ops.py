@@ -2515,68 +2515,71 @@ def _ivfpq_train(spark: SparkSession, sf_dir: str, overlap=None):
 
         pool = ThreadPoolExecutor(max_workers=1)
         fut = pool.submit(overlap, pts)
-    # coarse k-means (k=4, 2 iterations) over the full vectors
-    cent = (
-        pts.withColumn("rn", F.row_number().over(Wnd.orderBy("vec_id")))
-        .filter(F.col("rn") <= 4)
-        .select((F.col("rn") - 1).alias("cid"), F.col("q").alias("cq"))
-    )
-    cdist = F.expr(
-        "aggregate(zip_with(q, cq, (a, b) -> (a - b) * (a - b)), 0L, "
-        "(acc, x) -> acc + x)"
-    )
-    casg = None
-    for _ in range(IVFPQ_COARSE_ITERS):
-        # min-struct argmin instead of the per-vec_id row_number
-        # window (r12, guide §2.3) — same rewrite as _pq_train's
-        # assign stage: map-side partial aggregation collapses the k
-        # candidate rows per vector before the exchange, no sort.
-        casg = (
-            pts.crossJoin(F.broadcast(cent))
-            .withColumn("dist", cdist)
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"))
-            .select("vec_id", F.col("m.cid").alias("cid"))
-        )
+    try:
+        # coarse k-means (k=4, 2 iterations) over the full vectors
         cent = (
-            casg.join(pts, "vec_id")
-            .select("cid", F.posexplode("q").alias("d", "v"))
-            .groupBy("cid", "d")
-            .agg(F.expr("sum(v) div count(*)").alias("coord"))
-            .groupBy("cid")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(d, coord))), "
-                    "x -> x.coord)"
-                ).alias("cq")
+            pts.withColumn("rn", F.row_number().over(Wnd.orderBy("vec_id")))
+            .filter(F.col("rn") <= 4)
+            .select((F.col("rn") - 1).alias("cid"), F.col("q").alias("cq"))
+        )
+        cdist = F.expr(
+            "aggregate(zip_with(q, cq, (a, b) -> (a - b) * (a - b)), 0L, "
+            "(acc, x) -> acc + x)"
+        )
+        casg = None
+        for _ in range(IVFPQ_COARSE_ITERS):
+            # min-struct argmin instead of the per-vec_id row_number
+            # window (r12, guide §2.3) — same rewrite as _pq_train's
+            # assign stage: map-side partial aggregation collapses the k
+            # candidate rows per vector before the exchange, no sort.
+            casg = (
+                pts.crossJoin(F.broadcast(cent))
+                .withColumn("dist", cdist)
+                .groupBy("vec_id")
+                .agg(F.min(F.struct("dist", "cid")).alias("m"))
+                .select("vec_id", F.col("m.cid").alias("cid"))
+            )
+            cent = (
+                casg.join(pts, "vec_id")
+                .select("cid", F.posexplode("q").alias("d", "v"))
+                .groupBy("cid", "d")
+                .agg(F.expr("sum(v) div count(*)").alias("coord"))
+                .groupBy("cid")
+                .agg(
+                    F.expr(
+                        "transform(array_sort(collect_list(struct(d, coord))), "
+                        "x -> x.coord)"
+                    ).alias("cq")
+                )
+                .localCheckpoint()
+            )
+        casg = casg.localCheckpoint()
+        # residual subvectors -> the shared PQ trainer (subs hook)
+        rsub = (
+            pts.join(casg, "vec_id")
+            .join(F.broadcast(cent), "cid")
+            .select(
+                "vec_id",
+                F.col("cid").alias("ccid"),
+                F.expr("zip_with(q, cq, (a, b) -> a - b)").alias("r"),
+            )
+            .select(
+                "vec_id",
+                "ccid",
+                F.posexplode(
+                    F.expr("transform(sequence(0, 3), s -> slice(r, s * 16 + 1, 16))")
+                ).alias("sub", "sq"),
             )
             .localCheckpoint()
         )
-    casg = casg.localCheckpoint()
-    # residual subvectors -> the shared PQ trainer (subs hook)
-    rsub = (
-        pts.join(casg, "vec_id")
-        .join(F.broadcast(cent), "cid")
-        .select(
-            "vec_id",
-            F.col("cid").alias("ccid"),
-            F.expr("zip_with(q, cq, (a, b) -> a - b)").alias("r"),
-        )
-        .select(
-            "vec_id",
-            "ccid",
-            F.posexplode(
-                F.expr("transform(sequence(0, 3), s -> slice(r, s * 16 + 1, 16))")
-            ).alias("sub", "sq"),
-        )
-        .localCheckpoint()
-    )
-    _, rcent, rasg = _pq_train(spark, sf_dir, subs=rsub.select("vec_id", "sub", "sq"))
-    if overlap is not None:
-        res = fut.result()
-        pool.shutdown()
-        return pts, cent, casg, rcent, rasg, res
-    return pts, cent, casg, rcent, rasg
+        _, rcent, rasg = _pq_train(spark, sf_dir, subs=rsub.select("vec_id", "sub", "sq"))
+        if overlap is not None:
+            return pts, cent, casg, rcent, rasg, fut.result()
+        return pts, cent, casg, rcent, rasg
+    finally:
+        # also on the error path: no pool thread outlives the call
+        if pool is not None:
+            pool.shutdown(cancel_futures=True)
 
 
 @register(

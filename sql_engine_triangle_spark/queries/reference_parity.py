@@ -18,7 +18,17 @@ deliberate, documented deviations:
 The date filters are built with `sources.ingest.date_since`, so on a
 table partitioned by `month_col` each scan opens only the months the
 filter can match (the lab's `PARTITION BY toYYYYMM(date)` pruning);
-on a flat table they are the plain date predicates.
+on a flat table they are the plain date predicates. The table is
+read through the catalog handle ``sources.ddl.open_table``: its
+schema and partitions come from catalog metadata, so building a query
+runs no Spark job and lists only the partitions the filter keeps.
+
+Each query ends in ``_ordered``: its result is coalesced to one
+partition and sorted inside that one task. A global ``orderBy`` would
+plan a range exchange and a sampling job for results this small; each
+result is bounded by its number of groups (Q1: the 5 types; Q2: 5
+towns x months; Q3: types x years; Q4: 10 counties x types), whatever
+the table's size.
 
 Kept OUTSIDE the driver registry (the driver's sf dirs don't contain
 property_sales; the fixture is generated deterministically in tests)
@@ -32,13 +42,21 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sql_engine_triangle_spark.sources.ddl import open_table
 from sql_engine_triangle_spark.sources.ingest import date_since
 
 Q2_TOWNS = ["LONDON", "MANCHESTER", "BRISTOL", "BIRMINGHAM", "NOTTINGHAM"]
 
 
 def load_property_sales(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return open_table(spark, path)
+
+
+def _ordered(df: DataFrame, *cols) -> DataFrame:
+    # The final ORDER BY in one task, with no range exchange. Only for
+    # results bounded by a number of groups (module doc): at most a
+    # few hundred rows here.
+    return df.coalesce(1).sortWithinPartitions(*cols)
 
 
 def _round0(col: Column) -> Column:
@@ -72,7 +90,7 @@ def q1(spark: SparkSession, path: str) -> DataFrame:
             _round0(F.min("price")).alias("min_price"),
             _round0(F.max("price")).alias("max_price"),
         )
-        .orderBy(F.desc("avg_price"), "type")
+        .transform(_ordered, F.desc("avg_price"), "type")
     )
 
 
@@ -102,7 +120,7 @@ def q2(spark: SparkSession, path: str) -> DataFrame:
             F.count("*").alias("transactions"),
             _round0(F.avg("price")).alias("avg_price"),
         )
-        .orderBy("town", "month")
+        .transform(_ordered, "town", "month")
     )
 
 
@@ -138,9 +156,15 @@ ORDER BY type, year
 def q3(spark: SparkSession, path: str) -> DataFrame:
     ps = load_property_sales(spark, path)
     ps = ps.filter(date_since(ps, "2015-01-01"))
-    yearly = ps.groupBy(F.year("date").alias("year"), "type").agg(
-        F.avg("price").alias("avg_price_raw"),
-        F.count("*").alias("transactions"),
+    # One partition before the window: the per-type window then needs
+    # no hash exchange, and the final sort runs in the same task.
+    yearly = (
+        ps.groupBy(F.year("date").alias("year"), "type")
+        .agg(
+            F.avg("price").alias("avg_price_raw"),
+            F.count("*").alias("transactions"),
+        )
+        .coalesce(1)
     )
     w = Window.partitionBy("type").orderBy("year")
     prev = F.lag("avg_price_raw").over(w)
@@ -160,7 +184,7 @@ def q3(spark: SparkSession, path: str) -> DataFrame:
             .cast("double")
             .alias("yoy_pct"),
         )
-        .orderBy("type", "year")
+        .transform(_ordered, "type", "year")
     )
 
 
@@ -231,7 +255,7 @@ def q4(spark: SparkSession, path: str) -> DataFrame:
             pct(3).alias("p75"),
             pct(4).alias("p95"),
         )
-        .orderBy("county", "type")
+        .transform(_ordered, "county", "type")
     )
 
 

@@ -16,11 +16,20 @@ copy, as thin Spark-catalog wrappers:
   first. Gated: no network in CI, tested via file:// URLs.
 - ANALYZE (stats → CBO; README.md:353,367).
 - dynamic partition DDL templating (F15; preparedataset.sql:98-105).
+- the table handle (`open_table`): a parquet directory read as a
+  catalog table whose partitions are tracked by the catalog, so a
+  read lists only the partitions its filters keep (the lab's
+  ``PARTITION BY toYYYYMM(date)`` metadata, 01-create-table.sql:72).
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import threading
 import urllib.request
+from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +49,110 @@ def create_external_table(
 
 def drop_table_if_exists(spark: SparkSession, name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@dataclass
+class _Registration:
+    name: str
+    root: tuple[int, int]  # (st_dev, st_ino) of the directory registered
+    partitions: set[str] = field(default_factory=set)  # directory names
+
+
+# (applicationId, absolute path) -> the catalog table serving that path
+_TABLES: dict[tuple[str, str], _Registration] = {}
+_TABLES_LOCK = threading.Lock()
+
+
+def open_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet directory at ``path`` (a path on the driver's file
+    system) as a catalog table.
+
+    On first use in a SparkContext the path is registered as an
+    EXTERNAL parquet table (``create_external_table``) under a reserved
+    name derived from a hash of the path, in the session's default
+    database, and its partitions are recovered into the catalog. The
+    schema, partition column included, is inferred once, there: a
+    later read runs no schema job, and a file written with other
+    columns is read with the registered ones. Every open then
+
+    - lists the root's partition directory names on the driver (one
+      readdir) and adds or drops catalog partitions for the names that
+      changed;
+    - refreshes the table, so the partitions a query keeps have their
+      files listed again: appended, compacted or swapped files are
+      seen by the next read; a pruned partition is never listed.
+
+    The table is registered again (dropped, then created) when the
+    root directory was replaced (another inode, as after a rename
+    swap) or after ``forget_table(path)``, which
+    ``sources.ingest.write_partitioned(mode="overwrite")`` calls. A
+    missing path raises the AnalysisException a parquet read of it
+    raises and drops the registration. One partition level (or none)
+    is supported: the Hive layout ``write_partitioned`` writes.
+
+    A frame from here is planned against the table as it is when the
+    frame runs; run it before its path is swapped or rewritten."""
+    path = os.path.abspath(path)
+    key = (spark.sparkContext.applicationId, path)
+    with _TABLES_LOCK:
+        reg = _TABLES.get(key)
+        try:
+            st = os.stat(path)
+            names = _partition_dirs(path)
+        except FileNotFoundError:
+            if reg is not None:
+                drop_table_if_exists(spark, f"`{reg.name}`")
+                del _TABLES[key]
+            spark.read.parquet(path)  # raises Spark's PATH_NOT_FOUND
+            raise
+        root = (st.st_dev, st.st_ino)
+        if reg is None or reg.root != root:
+            name = "_open_table_" + hashlib.sha1(path.encode()).hexdigest()[:16]
+            drop_table_if_exists(spark, f"`{name}`")
+            create_external_table(spark, f"`{name}`", path)
+            reg = _TABLES[key] = _Registration(name, root)
+        _sync_partitions(spark, reg, names)
+        spark.catalog.refreshTable(reg.name)
+        return spark.table(reg.name)
+
+
+def forget_table(path: str) -> None:
+    """Make the next ``open_table(spark, path)`` register the path
+    again, so a rewrite with other columns is read with its own
+    schema."""
+    path = os.path.abspath(path)
+    with _TABLES_LOCK:
+        for key in [k for k in _TABLES if k[1] == path]:
+            del _TABLES[key]
+
+
+def _partition_dirs(path: str) -> set[str]:
+    # Spark skips names starting with "_" or "." (_temporary, ...)
+    with os.scandir(path) as entries:
+        return {
+            e.name
+            for e in entries
+            if "=" in e.name and not e.name.startswith(("_", ".")) and e.is_dir()
+        }
+
+
+def _partition_spec(dirname: str) -> str:
+    col, value = dirname.split("=", 1)
+    value = unquote(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"PARTITION (`{col}` = '{value}')"
+
+
+def _sync_partitions(spark: SparkSession, reg: _Registration, names: set[str]) -> None:
+    """Add and drop catalog partitions so they match ``names``. An
+    EXTERNAL table keeps the files of a dropped partition."""
+    added, dropped = sorted(names - reg.partitions), sorted(reg.partitions - names)
+    if added:
+        specs = " ".join(_partition_spec(n) for n in added)
+        spark.sql(f"ALTER TABLE `{reg.name}` ADD IF NOT EXISTS {specs}")
+    if dropped:
+        specs = ", ".join(_partition_spec(n) for n in dropped)
+        spark.sql(f"ALTER TABLE `{reg.name}` DROP IF EXISTS {specs}")
+    reg.partitions = names
 
 
 def analyze_table(spark: SparkSession, name: str, columns: list[str] | None = None) -> None:

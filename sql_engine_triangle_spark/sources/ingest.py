@@ -19,6 +19,15 @@ which adds the implied ``month >= toYYYYMM(day)`` conjunct beside
 derives no partition filter from a predicate on ``date`` itself, so
 ``Engine.sql`` text and every other date predicate (``<``, ``=``,
 ``BETWEEN``, ...) still open every partition.
+
+What the reference queries read: ``sources.ddl.open_table`` over the
+partitioned path, a catalog table whose partitions the catalog tracks.
+Each open adds or drops catalog partitions for month directories that
+appeared or went away, and refreshes the table, so only the months a
+filter keeps are listed, and appended or compacted files are seen by
+the next read. Its schema is fixed when the path is registered: a
+``write_partitioned(mode="overwrite")`` or a replaced directory
+registers it again, other writes must keep the columns.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from sql_engine_triangle_spark.functions.scalar import best_effort_date, decode_enum, yyyymm
+from sql_engine_triangle_spark.sources.ddl import forget_table
 
 
 def raw_string_schema(columns: list[str]) -> StructType:
@@ -178,13 +188,17 @@ def write_partitioned(
     selectivity on the sort keys). The sort leads with the partition
     column: a partitioned write needs its input ordered by it, and
     without that prefix Spark plans its own sort on ``partition_col``
-    and drops this one, leaving the files unsorted on ``sort_cols``."""
+    and drops this one, leaving the files unsorted on ``sort_cols``.
+    An overwrite makes the next ``sources.ddl.open_table`` of ``path``
+    register it again, with the schema just written."""
     out = df
     if sort_cols:
         out = out.repartition(F.col(partition_col)).sortWithinPartitions(
             partition_col, *sort_cols
         )
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
+    if mode == "overwrite":
+        forget_table(path)
 
 
 def export_csv(df: DataFrame, path: str) -> None:

@@ -779,3 +779,26 @@ def test_dsir_importance_matches_python_reference(spark):
     assert len(sel) == b
     assert sum(marked[d] for d in sel) == 0, "selection must avoid marked docs"
     assert sum(marked.values()) > 0
+
+
+def test_ivfpq_trainer_error_leaves_no_pool_thread(spark, monkeypatch):
+    """A trainer that raises still shuts down the pool running its
+    ``overlap`` callback: no worker thread outlives the call."""
+    import threading
+
+    import pytest
+
+    from sql_engine_triangle_spark.queries import curation_ops
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("trainer failed")
+
+    monkeypatch.setattr(curation_ops, "_pq_train", fail)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="trainer failed"):
+        curation_ops._ivfpq_train(spark, SF_DIR_SMALL, overlap=lambda pts: pts.count())
+    left = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert left == []

@@ -2,11 +2,12 @@
 the way the lab's ClickHouse table is laid out (``PARTITION BY
 toYYYYMM(date)``): one Hive partition per month, 372 of them.
 
-Pins the plan (every scan carries a ``month`` partition filter), the
-cost of building a query frame (partition directories listed on the
-driver, so at most one Spark job: the schema read), and exactness
-against DuckDB on date boundaries, a NULL date and a read right after
-an append."""
+Pins the plan (every scan carries a ``month`` partition filter, and
+no range exchange orders the small result), the cost of building a
+query frame (schema and partitions come from the catalog, so no Spark
+job once the table is registered), and exactness against DuckDB, row
+order included, on date boundaries, a NULL date and a read right
+after an append."""
 
 from __future__ import annotations
 
@@ -33,6 +34,13 @@ QUERIES = {
     "q2": (rp.q2, rp.Q2_SQL, 202001),
     "q3": (rp.q3, rp.Q3_SQL, 201501),
     "q4": (rp.q4, rp.Q4_SQL, 202001),
+}
+# The ORDER BY columns of each query's SQL (none is NULL in a result).
+ORDER_KEYS = {
+    "q1": ["avg_price", "type"],
+    "q2": ["town", "month"],
+    "q3": ["type", "year"],
+    "q4": ["county", "type"],
 }
 # Each side of both filter bounds (2015-01-01 and 2020-01-01), and a
 # NULL date, which lands in __HIVE_DEFAULT_PARTITION__.
@@ -98,8 +106,17 @@ def test_every_scan_prunes_month_partitions(spark, monthly_table, name):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_building_a_query_runs_at_most_one_job(spark, monthly_table, name):
+def test_final_ordering_has_no_range_exchange(spark, monthly_table, name):
     fn = QUERIES[name][0]
+    assert "rangepartitioning" not in executed_plan(fn(spark, monthly_table)).lower()
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_building_a_query_runs_at_most_one_job(spark, monthly_table, name):
+    # A warm build runs none: the first open of the path registers the
+    # table, which reads the schema with one job.
+    fn = QUERIES[name][0]
+    fn(spark, monthly_table)
     sc = spark.sparkContext
     group = f"build-{name}"
     sc.setJobGroup(group, group)
@@ -107,13 +124,16 @@ def test_building_a_query_runs_at_most_one_job(spark, monthly_table, name):
         fn(spark, monthly_table)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_duckdb_parity_on_month_partitions(spark, monthly_table, name):
     fn, sql, _ = QUERIES[name]
-    assert_frames_match(fn(spark, monthly_table).toPandas(), _duckdb_rows(monthly_table, sql))
+    got, want = fn(spark, monthly_table).toPandas(), _duckdb_rows(monthly_table, sql)
+    assert_frames_match(got, want)
+    keys = ORDER_KEYS[name]
+    assert got[keys].astype(str).values.tolist() == want[keys].astype(str).values.tolist()
 
 
 def test_flat_table_runs_unpruned_with_the_same_answers(spark, monthly_table, tmp_path):
@@ -126,9 +146,9 @@ def test_flat_table_runs_unpruned_with_the_same_answers(spark, monthly_table, tm
 
 
 def test_append_is_visible_to_the_next_read(spark, monthly_table, tmp_path):
-    """Partitions are listed on every read, with no cache: rows
-    appended to existing months and to a new one are in the next
-    answer of the same session."""
+    """Every open refreshes the table: rows appended to existing
+    months and to a new one are in the next answer of the same
+    session."""
     path = str(tmp_path / "property_sales")
     shutil.copytree(monthly_table, path)
     before = rp.q1(spark, path).agg(F.sum("transactions")).head()[0]
