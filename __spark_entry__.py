@@ -2,7 +2,7 @@
 
 Thin façade over ``sql_engine_triangle_spark.queries.registry`` —
 every implemented operator from SURVEY.md §2 is registered there with
-its DataFrame builder and (where SQL-expressible) a DuckDB oracle.
+its Spark form and (where SQL-expressible) a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -24,9 +24,7 @@ from sql_engine_triangle_spark.queries import registry  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (reference Q1 shape) on /root/testdata/sf0.001."""
-    from sql_engine_triangle_spark.queries.core import q1_agg_by_type
-
-    return q1_agg_by_type(spark, "/root/testdata/sf0.001")
+    return registry.get("q1_agg_by_type").fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

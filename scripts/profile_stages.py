@@ -11,8 +11,7 @@ Usage:
     python scripts/profile_stages.py <profile-name> [sf_dir]
 
 Profiles are registered in PROFILES below; each returns an ordered
-list of (label, DataFrame) pairs. Timings are min-of-2 warmed runs,
-matching bench.py methodology.
+list of (label, DataFrame) pairs. Timings are min-of-2 warmed runs.
 """
 
 from __future__ import annotations

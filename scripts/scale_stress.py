@@ -535,7 +535,7 @@ def _gen_corpora() -> None:
 def _run_scale(scale: int, variant: str, only: set[str] | None = None) -> None:
     """Child mode: run every entry scheduled at this scale in this
     fresh JVM (optionally filtered to ``only`` — the --redo-entries
-    path); print one RESULT line (bench.py cohort protocol)."""
+    path); print one RESULT line."""
     from sql_engine_triangle_spark.queries import registry
     from sql_engine_triangle_spark.session import get_spark
 
@@ -682,7 +682,8 @@ def main() -> None:
     if "--gen-only" in sys.argv:
         return
 
-    # One fresh JVM per (scale, variant) — bench.py cohort isolation.
+    # One fresh JVM per (scale, variant): entries in a shared JVM
+    # inherit each other's GC and block-manager state.
     # Per-job results are cached in .scale_data/results.json so a
     # single polluted or newly-scheduled job can be re-run with
     # --redo x1,ov30 instead of repeating the whole (30+ min) sweep;

@@ -7,9 +7,11 @@ psql/clickhouse-client connection.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
-from sql_engine_triangle_spark.catalog import DEFAULT_SF_DIR, register_views
+from sql_engine_triangle_spark.catalog import DEFAULT_SF_DIR, load_table, register_views
 from sql_engine_triangle_spark.queries import registry
 from sql_engine_triangle_spark.session import get_spark
 
@@ -25,20 +27,24 @@ class Engine:
     def __init__(self, spark: SparkSession | None = None, sf_dir: str = DEFAULT_SF_DIR):
         self.spark = spark or get_spark()
         self.sf_dir = sf_dir
-        self._views_registered = False
+        self._sql_session: SparkSession | None = None
+        self._sql_lock = threading.Lock()
 
     # -- Entry A: SQL ------------------------------------------------
     def sql(self, query: str) -> DataFrame:
-        """spark.sql over the catalog views (registered on first use)."""
-        if not self._views_registered:
-            register_views(self.spark, self.sf_dir)
-            self._views_registered = True
-        return self.spark.sql(query)
+        """spark.sql over this Engine's fixture tables, named as in
+        ``catalog.TABLES``. The views live in a child session
+        (``newSession``: the same SparkContext and cache, its own temp
+        views and SQL conf) made on first use, so Engines over other
+        ``sf_dir`` on the same session never read each other's tables."""
+        with self._sql_lock:
+            if self._sql_session is None:
+                self._sql_session = self.spark.newSession()
+                register_views(self._sql_session, self.sf_dir)
+        return self._sql_session.sql(query)
 
     # -- Entry B: DataFrame -----------------------------------------
     def table(self, name: str) -> DataFrame:
-        from sql_engine_triangle_spark.catalog import load_table
-
         return load_table(self.spark, self.sf_dir, name)
 
     # -- Entry C: registered operator pipelines ---------------------

@@ -30,20 +30,6 @@ def decode_enum(col: Column, mapping: dict[str, str]) -> Column:
     return col if expr is None else expr.otherwise(col)
 
 
-def encode_enum(col: Column, mapping: dict[str, int], default: int = 0) -> Column:
-    """String→code direction of the Enum8 columns
-    (01-create-table.sql:59,61); unmatched input → ``default``
-    (ClickHouse Enum8 'other'=0 convention)."""
-    expr: Column | None = None
-    for src, code in mapping.items():
-        expr = (
-            F.when(col == src, F.lit(code))
-            if expr is None
-            else expr.when(col == src, F.lit(code))
-        )
-    return F.lit(default) if expr is None else expr.otherwise(F.lit(default)).cast("int")
-
-
 def yyyymm(col: Column) -> Column:
     """ClickHouse ``toYYYYMM`` (F4, 01-create-table.sql:72) — the
     derived partition column used for monthly partition pruning. The

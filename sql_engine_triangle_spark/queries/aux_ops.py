@@ -15,208 +15,132 @@ from pyspark.sql.window import Window
 
 from sql_engine_triangle_spark.catalog import load_table
 from sql_engine_triangle_spark.functions.scalar import round_stable, yyyymm
-from sql_engine_triangle_spark.queries.core import Q1_ORACLE, Q4_ORACLE
-from sql_engine_triangle_spark.queries.registry import register
+from sql_engine_triangle_spark.queries.core import Q1_SQL, Q4_ORACLE
+from sql_engine_triangle_spark.queries.registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # P family — projections / filters / predicates
 # ---------------------------------------------------------------------------
 
-P_PREDICATES_ORACLE = """
+register_sql(
+    "p_predicates",
+    """
 SELECT
   l_orderkey,
   l_linenumber,
   CAST(round(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)), 2)
        AS DOUBLE) AS net_price,
   (l_quantity > 25.0) AS is_bulk
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate BETWEEN TIMESTAMP '1997-01-01' AND TIMESTAMP '1997-12-31'
   AND l_returnflag IN ('A', 'R')
   AND l_linestatus = 'F'
   AND l_discount > 0.02
   AND NULLIF(l_tax, 0.0) IS NOT NULL
 ORDER BY l_orderkey, l_linenumber
-"""
-
-
-@register(
-    "p_predicates",
-    oracle=P_PREDICATES_ORACLE,
+""",
     tags=("P1", "P2", "P4", "P5", "P6", "P7", "P8", "P9", "F11"),
-)
-def p_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter kitchen-sink: BETWEEN (P4), IN (P5), equality (P6),
+    doc="""Filter kitchen-sink: BETWEEN (P4), IN (P5), equality (P6),
     IS NOT NULL (P7), conjunction (P8), boolean derivation (P9),
     derived projection (P2). Reference: preparedataset.sql:203-242,
-    q2/q4 WHERE clauses. All predicates push to the Parquet scan."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            F.col("l_shipdate").between("1997-01-01", "1997-12-31 00:00:00")
-            & F.col("l_returnflag").isin("A", "R")
-            & (F.col("l_linestatus") == "F")
-            & (F.col("l_discount") > 0.02)
-            & F.nullif(F.col("l_tax"), F.lit(0.0)).isNotNull()
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            # Product of two 2-decimal values is an exact 4-decimal
-            # quantity; binary doubles land on .xx5 ties where Spark
-            # (decimal-string HALF_UP) and DuckDB (binary) disagree.
-            # Routing through DECIMAL(18,4) makes rounding exact and
-            # engine-independent (SURVEY.md §7 hazard 2).
-            F.round(
-                (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("net_price"),
-            (F.col("l_quantity") > 25.0).alias("is_bulk"),
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
+    q2/q4 WHERE clauses. All predicates push to the Parquet scan.""",
+)
 
 
-P_HAVING_ORACLE = """
+register_sql(
+    "p_having_topk",
+    """
 SELECT p_brand, count(*) AS cnt,
        CAST(round(CAST(avg(p_retailprice) AS DECIMAL(18,6)), 2) AS DOUBLE) AS avg_price
-FROM part
+FROM {part}
 GROUP BY p_brand
 HAVING count(*) > 50
 ORDER BY cnt DESC, p_brand
 LIMIT 50
-"""
-
-
-@register("p_having_topk", oracle=P_HAVING_ORACLE, tags=("P10", "A13", "O5"))
-def p_having_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING threshold + ORDER + LIMIT (preparedataset.sql:236-242)."""
-    part = load_table(spark, sf_dir, "part")
-    return (
-        part.groupBy("p_brand")
-        .agg(F.count("*").alias("cnt"), round_stable(F.avg("p_retailprice")).alias("avg_price"))
-        .filter(F.col("cnt") > 50)
-        .orderBy(F.desc("cnt"), "p_brand")
-        .limit(50)
-    )
+""",
+    tags=("P10", "A13", "O5"),
+    doc="""HAVING threshold + ORDER + LIMIT (preparedataset.sql:236-242).""",
+)
 
 
 # ---------------------------------------------------------------------------
 # J family — joins
 # ---------------------------------------------------------------------------
 
-J_MULTIWAY_ORACLE = """
-SELECT r_name, count(*) AS num_customers,
+register_sql(
+    "j_multiway_broadcast",
+    """
+SELECT /*+ BROADCAST(n, r) */ r_name, count(*) AS num_customers,
        CAST(round(CAST(avg(c_acctbal) AS DECIMAL(18,6)), 2) AS DOUBLE) AS avg_bal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
+FROM {customer}
+JOIN {nation} n ON c_nationkey = n_nationkey
+JOIN {region} r ON n_regionkey = r_regionkey
 GROUP BY r_name
 ORDER BY r_name
-"""
-
-
-@register("j_multiway_broadcast", oracle=J_MULTIWAY_ORACLE, tags=("J1", "A2", "A5"))
-def j_multiway_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-way inner equi-join through two small dims (J1, q4
+""",
+    tags=("J1", "A2", "A5"),
+    doc="""Multi-way inner equi-join through two small dims (J1, q4
     README.md:69-79). Both dims are broadcast — zero fact shuffles
-    before the aggregation; at 100 TB the only shuffle is on r_name."""
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    return (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("num_customers"),
-            round_stable(F.avg("c_acctbal")).alias("avg_bal"),
-        )
-        .orderBy("r_name")
-    )
+    before the aggregation; at 100 TB the only shuffle is on r_name.""",
+)
 
 
-J_LEFT_ORACLE = """
+register_sql(
+    "j_left_outer",
+    """
 SELECT n_name, count(c_custkey) AS num_customers
-FROM nation
-LEFT JOIN customer ON n_nationkey = c_nationkey
+FROM {nation}
+LEFT JOIN {customer} ON n_nationkey = c_nationkey
 GROUP BY n_name
 ORDER BY n_name
-"""
+""",
+    tags=("J1",),
+    doc="""LEFT OUTER join preserving empty dims (free Spark surface —
+    SURVEY.md §2.3 notes outer joins absent from the reference).""",
+)
 
 
-@register("j_left_outer", oracle=J_LEFT_ORACLE, tags=("J1",))
-def j_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER join preserving empty dims (free Spark surface —
-    SURVEY.md §2.3 notes outer joins absent from the reference)."""
-    nat = load_table(spark, sf_dir, "nation")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        nat.join(cust, nat.n_nationkey == cust.c_nationkey, "left")
-        .groupBy("n_name")
-        .agg(F.count("c_custkey").alias("num_customers"))
-        .orderBy("n_name")
-    )
-
-
-J_SEMI_ORACLE = """
+register_sql(
+    "j_semi",
+    """
 SELECT o_orderkey, o_totalprice
-FROM orders
+FROM {orders}
 WHERE EXISTS (
-  SELECT 1 FROM lineitem
+  SELECT 1 FROM {lineitem}
   WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0
 )
 ORDER BY o_orderkey
-"""
+""",
+    tags=("J3",),
+    doc="""LEFT SEMI join — the implicit semi-join the lab's q4 CTE join
+    reduces to (SURVEY.md §2.3 J3).""",
+)
 
 
-@register("j_semi", oracle=J_SEMI_ORACLE, tags=("J3",))
-def j_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join — the implicit semi-join the lab's q4 CTE join
-    reduces to (SURVEY.md §2.3 J3)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    big = li.filter(F.col("l_quantity") >= 49.0)
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey, "left_semi")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-    )
-
-
-J_ANTI_ORACLE = """
+register_sql(
+    "j_anti",
+    """
 SELECT c_custkey, c_name
-FROM customer
+FROM {customer}
 WHERE NOT EXISTS (
-  SELECT 1 FROM orders
+  SELECT 1 FROM {orders}
   WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
 )
 ORDER BY c_custkey
-"""
-
-
-@register("j_anti", oracle=J_ANTI_ORACLE, tags=("J3",))
-def j_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT ANTI join (NOT EXISTS) — free Spark surface. Predicate
-    chosen so the anti side is non-empty at every fixture sf."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
+""",
+    tags=("J3",),
+    doc="""LEFT ANTI join (NOT EXISTS) — free Spark surface. Predicate
+    chosen so the anti side is non-empty at every fixture sf.""",
+)
 
 
 # ---------------------------------------------------------------------------
 # A family — aggregations
 # ---------------------------------------------------------------------------
 
-A_GLOBAL_ORACLE = """
+register_sql(
+    "a_global_stats",
+    """
 SELECT
   count(*) AS cnt,
   CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 1) AS DOUBLE) AS sum_qty,
@@ -224,282 +148,182 @@ SELECT
   round(min(l_extendedprice), 2) AS min_price,
   round(max(l_extendedprice), 2) AS max_price,
   CAST(sum(length(l_returnflag) + length(l_linestatus)) AS BIGINT) AS sum_flag_len
-FROM lineitem
-"""
-
-
-@register("a_global_stats", oracle=A_GLOBAL_ORACLE, tags=("A1", "A2", "A3", "A4", "A12", "F8"))
-def a_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global (no-group) aggregate: count/sum/avg/min/max plus the
+FROM {lineitem}
+""",
+    tags=("A1", "A2", "A3", "A4", "A12", "F8"),
+    doc="""Global (no-group) aggregate: count/sum/avg/min/max plus the
     lab's derived-length size estimate (clickhouse/queries.sql:3-8).
     sum_qty accumulates as DECIMAL — exact and order-independent, so
     Spark and DuckDB agree regardless of partial-agg ordering (a
-    double sum can drift enough to flip the rounding digit)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.count("*").alias("cnt"),
-        F.round(F.sum(F.col("l_quantity").cast("decimal(18,4)")), 1)
-        .cast("double")
-        .alias("sum_qty"),
-        round_stable(F.avg("l_extendedprice")).alias("avg_price"),
-        F.round(F.min("l_extendedprice"), 2).alias("min_price"),
-        F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-        F.sum(F.length("l_returnflag") + F.length("l_linestatus")).alias(
-            "sum_flag_len"
-        ),
-    )
+    double sum can drift enough to flip the rounding digit).""",
+)
 
 
-A_COUNT_DISTINCT_ORACLE = """
+register_sql(
+    "a_count_distinct",
+    """
 SELECT l_returnflag, count(DISTINCT l_partkey) AS uniq_parts, count(*) AS cnt
-FROM lineitem
+FROM {lineitem}
 GROUP BY l_returnflag
 ORDER BY l_returnflag
-"""
-
-
-@register("a_count_distinct", oracle=A_COUNT_DISTINCT_ORACLE, tags=("A11",))
-def a_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact count-distinct (the lab's `uniq` probes,
+""",
+    tags=("A11",),
+    doc="""Exact count-distinct (the lab's `uniq` probes,
     clickhouse/queries.sql:21-27, exact variant). At 100 TB prefer
     `approx_count_distinct` (see q4_approx_percentiles) — exact
-    distinct requires a per-key shuffle of the distinct values."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_partkey").alias("uniq_parts"), F.count("*").alias("cnt"))
-        .orderBy("l_returnflag")
-    )
+    distinct requires a per-key shuffle of the distinct values.""",
+)
 
 
-A_ROLLUP_ORACLE = """
+register_sql(
+    "a_rollup",
+    """
 SELECT l_returnflag, l_linestatus, count(*) AS cnt
-FROM lineitem
+FROM {lineitem}
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
 ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-"""
+""",
+    tags=("A5", "A6"),
+    doc="""ROLLUP hierarchy totals (free Spark surface; SURVEY.md §2.4
+    notes grouping sets absent from the reference but native here).""",
+)
 
 
-@register("a_rollup", oracle=A_ROLLUP_ORACLE, tags=("A5", "A6"))
-def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (free Spark surface; SURVEY.md §2.4
-    notes grouping sets absent from the reference but native here)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )
-
-
-A_CUBE_ORACLE = """
+register_sql(
+    "a_cube",
+    """
 SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
        round(sum(o_totalprice), 1) AS sum_total
-FROM orders
+FROM {orders}
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-"""
+""",
+    tags=("A5", "A6"),
+    doc="""CUBE over two keys (free Spark surface).""",
+)
 
 
-@register("a_cube", oracle=A_CUBE_ORACLE, tags=("A5", "A6"))
-def a_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two keys (free Spark surface)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("cnt"), F.round(F.sum("o_totalprice"), 1).alias("sum_total"))
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
-    )
-
-
-A_GROUPING_SETS_ORACLE = """
+register_sql(
+    "a_grouping_sets",
+    """
 SELECT l_returnflag, l_linestatus, count(*) AS cnt
-FROM lineitem
+FROM {lineitem}
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
 ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-"""
-
-
-@register("a_grouping_sets", oracle=A_GROUPING_SETS_ORACLE, tags=("A5", "A6"))
-def a_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (free Spark surface; SQL entry since the
-    DataFrame API exposes only rollup/cube)."""
-    path = f"{sf_dir}/lineitem.parquet"
-    return spark.sql(
-        f"""
-        SELECT l_returnflag, l_linestatus, count(*) AS cnt
-        FROM parquet.`{path}`
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-                                (l_returnflag, l_linestatus))
-        ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-        """
-    )
+""",
+    tags=("A5", "A6"),
+    doc="""Explicit GROUPING SETS (free Spark surface; SQL entry since the
+    DataFrame API exposes only rollup/cube).""",
+)
 
 
 # ---------------------------------------------------------------------------
 # W family — windows (beyond Q3's LAG)
 # ---------------------------------------------------------------------------
 
-W_RANK_ORACLE = """
+register_sql(
+    "w_rank_topk_per_group",
+    """
 SELECT o_orderstatus, o_orderkey, o_totalprice, rn
 FROM (
   SELECT o_orderstatus, o_orderkey, o_totalprice,
          row_number() OVER (PARTITION BY o_orderstatus
                             ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders
+  FROM {orders}
 )
 WHERE rn <= 3
 ORDER BY o_orderstatus, rn
-"""
-
-
-@register("w_rank_topk_per_group", oracle=W_RANK_ORACLE, tags=("W1", "O3"))
-def w_rank_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k per group via row_number (ranking functions are free
+""",
+    tags=("W1", "O3"),
+    doc="""Top-k per group via row_number (ranking functions are free
     Spark surface per SURVEY.md §2.5). Deterministic tie-break on
-    o_orderkey."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderstatus").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_orderstatus", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_orderstatus", "rn")
-    )
+    o_orderkey.""",
+)
 
 
-W_MOVING_ORACLE = """
+register_sql(
+    "w_moving_avg",
+    """
 SELECT user_id, event_id, value,
        round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4)
          AS moving_avg
-FROM events
+FROM {events}
 WHERE user_id <= 50
 ORDER BY user_id, event_id
-"""
-
-
-@register("w_moving_avg", oracle=W_MOVING_ORACLE, tags=("W1", "W2"))
-def w_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moving average with an explicit ROWS frame over the event
+""",
+    tags=("W1", "W2"),
+    doc="""Moving average with an explicit ROWS frame over the event
     stream (frame specs are free Spark surface; the stream-shaped
-    table is user_events, 01-create-table.sql:31-41)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-3, Window.currentRow)
-    )
-    return (
-        ev.filter(F.col("user_id") <= 50)
-        .select(
-            "user_id",
-            "event_id",
-            "value",
-            F.round(F.avg("value").over(w), 4).alias("moving_avg"),
-        )
-        .orderBy("user_id", "event_id")
-    )
+    table is user_events, 01-create-table.sql:31-41).""",
+)
 
 
 # ---------------------------------------------------------------------------
 # O family — sorts / limits / top-k
 # ---------------------------------------------------------------------------
 
-O_TOPK_ORACLE = """
+register_sql(
+    "o_topk_rows",
+    """
 SELECT o_orderkey, o_orderdate, o_totalprice
-FROM orders
+FROM {orders}
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 100
-"""
-
-
-@register("o_topk_rows", oracle=O_TOPK_ORACLE, tags=("O4",))
-def o_topk_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-row top-k (preparedataset.sql:203-215) →
+""",
+    tags=("O4",),
+    doc="""Raw-row top-k (preparedataset.sql:203-215) →
     TakeOrderedAndProject, not a full sort: each task keeps a k-heap,
-    driver merges — O(n) scan at any scale."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_orderdate", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
-    )
+    driver merges — O(n) scan at any scale.""",
+)
 
 
 # ---------------------------------------------------------------------------
 # U family — set operations
 # ---------------------------------------------------------------------------
 
-U_UNION_ORACLE = """
-SELECT 'orders' AS src, count(*) AS cnt FROM orders
+register_sql(
+    "u_union_counts",
+    """
+SELECT 'orders' AS src, count(*) AS cnt FROM {orders}
 UNION ALL
-SELECT 'lineitem' AS src, count(*) AS cnt FROM lineitem
+SELECT 'lineitem' AS src, count(*) AS cnt FROM {lineitem}
 UNION ALL
-SELECT 'customer' AS src, count(*) AS cnt FROM customer
+SELECT 'customer' AS src, count(*) AS cnt FROM {customer}
 ORDER BY src
-"""
-
-
-@register("u_union_counts", oracle=U_UNION_ORACLE, tags=("U1", "A14"))
-def u_union_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL verification stitching — the lab's cross-engine
+""",
+    tags=("U1", "A14"),
+    doc="""UNION ALL verification stitching — the lab's cross-engine
     row-count parity check (preparedataset.sql:155-159,
-    postgres/get_size.sql:33-47)."""
-    frames = []
-    for t in ("orders", "lineitem", "customer"):
-        frames.append(
-            load_table(spark, sf_dir, t).agg(F.count("*").alias("cnt")).select(
-                F.lit(t).alias("src"), "cnt"
-            )
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.orderBy("src")
+    postgres/get_size.sql:33-47).""",
+)
 
 
-U_INTERSECT_ORACLE = """
-SELECT c_custkey FROM customer WHERE c_acctbal > 5000
+register_sql(
+    "u_intersect",
+    """
+SELECT c_custkey FROM {customer} WHERE c_acctbal > 5000
 INTERSECT
-SELECT o_custkey AS c_custkey FROM orders
+SELECT o_custkey AS c_custkey FROM {orders}
 ORDER BY c_custkey
-"""
+""",
+    tags=("U1",),
+    doc="""INTERSECT (distinct) — free Spark surface (SURVEY.md §2.7).""",
+)
 
 
-@register("u_intersect", oracle=U_INTERSECT_ORACLE, tags=("U1",))
-def u_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct) — free Spark surface (SURVEY.md §2.7)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    rich = cust.filter(F.col("c_acctbal") > 5000).select("c_custkey")
-    with_orders = orders.select(F.col("o_custkey").alias("c_custkey"))
-    return rich.intersect(with_orders).orderBy("c_custkey")
-
-
-U_EXCEPT_ORACLE = """
-SELECT p_brand FROM part
+register_sql(
+    "u_except",
+    """
+SELECT p_brand FROM {part}
 EXCEPT
-SELECT p_brand FROM part WHERE p_size >= 49
+SELECT p_brand FROM {part} WHERE p_size >= 49
 ORDER BY p_brand
-"""
-
-
-@register("u_except", oracle=U_EXCEPT_ORACLE, tags=("U1",))
-def u_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct) — free Spark surface. Predicate chosen so
-    the difference is non-empty at the fixture sfs."""
-    part = load_table(spark, sf_dir, "part")
-    big = part.filter(F.col("p_size") >= 49).select("p_brand")
-    # subtract == EXCEPT DISTINCT (set semantics); exceptAll would be
-    # bag semantics and keep surviving duplicates.
-    return part.select("p_brand").subtract(big).orderBy("p_brand")
+""",
+    tags=("U1",),
+    doc="""EXCEPT (distinct) — free Spark surface. Predicate chosen so
+    the difference is non-empty at the fixture sfs.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -546,7 +370,9 @@ def f_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-F_ENUM_ORACLE = """
+register_sql(
+    "f_enum_decode",
+    """
 SELECT
   CASE l_returnflag
     WHEN 'A' THEN 'accepted'
@@ -555,27 +381,15 @@ SELECT
     ELSE l_returnflag
   END AS flag_name,
   count(*) AS cnt
-FROM lineitem
+FROM {lineitem}
 GROUP BY 1
 ORDER BY flag_name
-"""
-
-
-@register("f_enum_decode", oracle=F_ENUM_ORACLE, tags=("F7",))
-def f_enum_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Enum decode via transform()-style mapping (F7,
+""",
+    tags=("F7",),
+    doc="""Enum decode via transform()-style mapping (F7,
     README.md:154-167). ClickHouse `transform` keeps unmatched input
-    unchanged — mirrored by the trailing otherwise(col)."""
-    from sql_engine_triangle_spark.functions.scalar import decode_enum
-
-    li = load_table(spark, sf_dir, "lineitem")
-    mapping = {"A": "accepted", "R": "returned", "N": "none"}
-    return (
-        li.select(decode_enum(F.col("l_returnflag"), mapping).alias("flag_name"))
-        .groupBy("flag_name")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("flag_name")
-    )
+    unchanged — mirrored by the CASE's ELSE branch.""",
+)
 
 
 F_DATE_ORACLE = """
@@ -608,69 +422,45 @@ def f_date_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-
-F_PIVOT_ORACLE = """
+register_sql(
+    "f_pivot",
+    """
 SELECT o_orderstatus,
   count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS urgent,
   count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS high,
   count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS medium,
   count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS not_specified,
   count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low
-FROM orders
+FROM {orders}
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
-"""
+""",
+    tags=("A6", "F-pivot"),
+    doc="""PIVOT (cross-tab) as conditional aggregation — one FILTER
+    count per pivot value, the form both engines read. The pivot
+    values are fixed in the text, so the schema is static (no
+    discovery pass over the data — the two-pass implicit form is a
+    scan you don't want at 100 TB) and an empty cell counts 0.""",
+)
 
 
-@register("f_pivot", oracle=F_PIVOT_ORACLE, tags=("A6", "F-pivot"))
-def f_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT (cross-tab) — free Spark surface; the oracle is the
-    portable conditional-aggregation form. Pivot values are given
-    explicitly so the schema is static (no discovery pass over the
-    data — the two-pass implicit form is a scan you don't want at
-    100 TB) and missing cells coalesce to 0 to match FILTER counts."""
-    orders = load_table(spark, sf_dir, "orders")
-    aliases = ("urgent", "high", "medium", "not_specified", "low")
-    piv = (
-        orders.groupBy("o_orderstatus")
-        .pivot("o_orderpriority", list(_PRIORITIES))
-        .agg(F.count(F.lit(1)))  # count(*) is rejected inside Pivot
-    )
-    return piv.select(
-        "o_orderstatus",
-        *[
-            F.coalesce(F.col(f"`{v}`"), F.lit(0)).alias(a)
-            for v, a in zip(_PRIORITIES, aliases)
-        ],
-    ).orderBy("o_orderstatus")
-
-
-F_UNPIVOT_ORACLE = """
-SELECT p_partkey, 'p_retailprice' AS attr, CAST(p_retailprice AS DOUBLE) AS val
-FROM part WHERE p_partkey <= 200
-UNION ALL
-SELECT p_partkey, 'p_size', CAST(p_size AS DOUBLE)
-FROM part WHERE p_partkey <= 200
+register_sql(
+    "f_unpivot",
+    """
+SELECT p_partkey, attr, val
+FROM (
+  SELECT p_partkey,
+         CAST(p_retailprice AS DOUBLE) AS p_retailprice,
+         CAST(p_size AS DOUBLE) AS p_size
+  FROM {part} WHERE p_partkey <= 200
+) UNPIVOT (val FOR attr IN (p_retailprice, p_size))
 ORDER BY p_partkey, attr
-"""
-
-
-@register("f_unpivot", oracle=F_UNPIVOT_ORACLE, tags=("F-pivot",))
-def f_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT (wide→long reshape), the inverse of f_pivot — a
-    zero-shuffle row expansion; oracle is the portable UNION ALL
-    form."""
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 200)
-    return (
-        part.select(
-            "p_partkey",
-            F.col("p_retailprice").cast("double").alias("p_retailprice"),
-            F.col("p_size").cast("double").alias("p_size"),
-        )
-        .unpivot(["p_partkey"], ["p_retailprice", "p_size"], "attr", "val")
-        .orderBy("p_partkey", "attr")
-    )
+""",
+    tags=("F-pivot",),
+    doc="""UNPIVOT (wide→long reshape), the inverse of f_pivot — a
+    zero-shuffle row expansion over one scan, in the SQL-standard
+    UNPIVOT syntax both engines read.""",
+)
 
 
 F_ARRAY_AGG_ORACLE = """
@@ -722,62 +512,32 @@ def f_lateral_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PROFILE_ORACLE = """
+register_sql(
+    "profile_columns",
+    """
 SELECT 'o_custkey' AS col, count(*) AS n, count(o_custkey) AS non_null,
        count(DISTINCT o_custkey) AS uniq,
        CAST(min(o_custkey) AS DOUBLE) AS min_v, CAST(max(o_custkey) AS DOUBLE) AS max_v
-FROM orders
+FROM {orders}
 UNION ALL
 SELECT 'o_orderkey', count(*), count(o_orderkey), count(DISTINCT o_orderkey),
        CAST(min(o_orderkey) AS DOUBLE), CAST(max(o_orderkey) AS DOUBLE)
-FROM orders
+FROM {orders}
 UNION ALL
 SELECT 'o_totalprice', count(*), count(o_totalprice), count(DISTINCT o_totalprice),
        CAST(round(CAST(min(o_totalprice) AS DECIMAL(18,6)), 2) AS DOUBLE),
        CAST(round(CAST(max(o_totalprice) AS DECIMAL(18,6)), 2) AS DOUBLE)
-FROM orders
+FROM {orders}
 ORDER BY col
-"""
-
-
-@register("profile_columns", oracle=PROFILE_ORACLE, tags=("S11", "A11"))
-def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiling (null counts, distincts, ranges) in ONE scan:
-    all per-column aggregates computed in a single aggregation, then
-    reshaped to long form driver-side from the 1-row result — vs the
-    oracle's three scans. The data-quality probe a pipeline runs
-    before trusting a new drop; at 100 TB swap count(DISTINCT) for
-    approx_count_distinct."""
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_custkey", "o_orderkey", "o_totalprice"]
-    aggs = []
-    for c in cols:
-        mn, mx = F.min(c).cast("double"), F.max(c).cast("double")
-        if c == "o_totalprice":  # float col: decimal-route the bounds
-            mn = F.round(F.min(c).cast("decimal(18,6)"), 2).cast("double")
-            mx = F.round(F.max(c).cast("decimal(18,6)"), 2).cast("double")
-        aggs += [
-            F.count("*").alias(f"{c}__n"),
-            F.count(c).alias(f"{c}__non_null"),
-            F.countDistinct(c).alias(f"{c}__uniq"),
-            mn.alias(f"{c}__min_v"),
-            mx.alias(f"{c}__max_v"),
-        ]
-    row = orders.agg(*aggs).head()
-    data = [
-        (
-            c,
-            row[f"{c}__n"],
-            row[f"{c}__non_null"],
-            row[f"{c}__uniq"],
-            row[f"{c}__min_v"],
-            row[f"{c}__max_v"],
-        )
-        for c in cols
-    ]
-    return spark.createDataFrame(
-        data, "col string, n long, non_null long, uniq long, min_v double, max_v double"
-    ).orderBy("col")
+""",
+    tags=("S11", "A11"),
+    doc="""Column profiling (row, non-null and distinct counts, ranges)
+    in long form: one aggregation per profiled column, unioned. The
+    data-quality probe a pipeline runs before trusting a new drop;
+    each branch scans the table, so at 100 TB profile in a single
+    aggregation and swap count(DISTINCT) for
+    approx_count_distinct.""",
+)
 
 
 F_JSON_ORACLE = """
@@ -950,39 +710,24 @@ def j_range_bands_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-W_VALUE_ORACLE = """
+register_sql(
+    "w_value_functions",
+    """
 SELECT o_orderstatus, o_orderkey, o_totalprice,
        first_value(o_totalprice) OVER w AS max_in_status,
        CAST(ntile(4) OVER w AS INTEGER) AS quartile,
        round(percent_rank() OVER w, 6) AS pct_rank
-FROM orders
+FROM {orders}
 WHERE o_orderkey <= 2000
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey)
 ORDER BY o_orderstatus, o_totalprice DESC, o_orderkey
-"""
-
-
-@register("w_value_functions", oracle=W_VALUE_ORACLE, tags=("W1",))
-def w_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window value/distribution functions (first_value, ntile,
+""",
+    tags=("W1",),
+    doc="""Window value/distribution functions (first_value, ntile,
     percent_rank) — free Spark surface beyond the reference's LAG
     (SURVEY.md §2.5). percent_rank is (rank-1)/(n-1): integer-derived,
-    rounded only to normalize repr."""
-    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    return (
-        orders.select(
-            "o_orderstatus",
-            "o_orderkey",
-            "o_totalprice",
-            F.first("o_totalprice").over(w).alias("max_in_status"),
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        )
-        .orderBy("o_orderstatus", F.desc("o_totalprice"), "o_orderkey")
-    )
+    rounded only to normalize repr.""",
+)
 
 
 W_RANGE_ORACLE = """
@@ -1032,132 +777,74 @@ def w_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SUB_CORR_ORACLE = """
+register_sql(
+    "sub_correlated_scalar",
+    """
 SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders o
+FROM {orders} o
 WHERE o_totalprice > 2.0 * (
   SELECT CAST(avg(o2.o_totalprice) AS DECIMAL(18,6))
-  FROM orders o2 WHERE o2.o_custkey = o.o_custkey
+  FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey
 )
 ORDER BY o_orderkey
-"""
-
-
-@register("sub_correlated_scalar", oracle=SUB_CORR_ORACLE, tags=("P-sub",))
-def sub_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (orders above 2x their customer's
+""",
+    tags=("P-sub",),
+    doc="""Correlated scalar subquery (orders above 2x their customer's
     average) — expressed via spark.sql so Catalyst performs the
     decorrelation rewrite (free surface; the DataFrame equivalent is
     a groupBy+join, but the SQL form exercises the decorrelator).
     The average is quantized through DECIMAL(18,6) on both sides so
     accumulation-order float drift can't flip rows sitting at the
-    2x-average boundary."""
-    path = f"{sf_dir}/orders.parquet"
-    return spark.sql(
-        f"""
-        WITH o AS (SELECT * FROM parquet.`{path}`)
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM o
-        WHERE o_totalprice > 2.0 * (
-          SELECT CAST(avg(o2.o_totalprice) AS DECIMAL(18,6))
-          FROM o o2 WHERE o2.o_custkey = o.o_custkey
-        )
-        ORDER BY o_orderkey
-        """
-    )
+    2x-average boundary.""",
+)
 
 
-J_STAR_ORACLE = """
-SELECT
+register_sql(
+    "j_star_revenue",
+    """
+SELECT /*+ BROADCAST(c, n, r) */
   r_name,
   n_name,
   count(*) AS cnt,
   CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
              / 1000.0, 1) AS DOUBLE) AS revenue_k
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {customer} c ON o_custkey = c_custkey
+JOIN {nation}   n ON c_nationkey = n_nationkey
+JOIN {region}   r ON n_regionkey = r_regionkey
 WHERE o_orderdate >= TIMESTAMP '1997-01-01'
   AND o_orderdate <  TIMESTAMP '1999-01-01'
 GROUP BY r_name, n_name
 ORDER BY r_name, n_name
-"""
-
-
-@register("j_star_revenue", oracle=J_STAR_ORACLE, tags=("J1", "A4", "A6"))
-def j_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Five-table star join (fact → orders → customer → nation →
+""",
+    tags=("J1", "A4", "A6"),
+    doc="""Five-table star join (fact → orders → customer → nation →
     region) with revenue rollup — the join-reordering/broadcast
     stress shape. The orders join is the only fact-sized shuffle;
     customer/nation/region are broadcast. Revenue accumulates as
     DECIMAL(18,4) — decimal sums are exact and order-independent, so
     both engines produce identical values regardless of accumulation
     order (a float sum could drift enough to flip the rounding
-    digit)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(
-                F.sum(
-                    (
-                        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-                    ).cast("decimal(18,4)")
-                )
-                / 1000.0,
-                1,
-            )
-            .cast("double")
-            .alias("revenue_k"),
-        )
-        .orderBy("r_name", "n_name")
-    )
+    digit).""",
+)
 
 
 # ---------------------------------------------------------------------------
-# SQL-entry demonstration: the same logical plan via spark.sql over
-# direct parquet paths (Entry A in SURVEY.md §3). One representative.
+# SQL-entry demonstration: the reference queries through spark.sql
+# (Entry A in SURVEY.md §3).
 # ---------------------------------------------------------------------------
 
 
-@register("sql_entry_q1", oracle=Q1_ORACLE, tags=("EP-A",))
-def sql_entry_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 expressed as a SQL string over `parquet.` paths — proves
-    the spark.sql entry point builds the identical logical plan as
-    the DataFrame form (tested for equality in tests/test_sql_entry).
-    Carries the same oracle as q1_agg_by_type; avg is decimal-routed
-    (round_stable's SQL spelling) so both entry points round
-    identically."""
-    path = f"{sf_dir}/lineitem.parquet"
-    return spark.sql(
-        f"""
-        SELECT
-          l_returnflag,
-          count(*) AS cnt,
-          CAST(round(CAST(avg(l_extendedprice) AS DECIMAL(18,6)), 2) AS DOUBLE)
-            AS avg_price,
-          round(min(l_extendedprice), 2) AS min_price,
-          round(max(l_extendedprice), 2) AS max_price
-        FROM parquet.`{path}`
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        GROUP BY l_returnflag
-        ORDER BY avg_price DESC, l_returnflag
-        """
-    )
+register_sql(
+    "sql_entry_q1",
+    Q1_SQL,
+    tags=("EP-A",),
+    doc="""Q1 under the name of the spark.sql() entry point (Entry A in
+    SURVEY.md §3): the same text as q1_agg_by_type, kept so the Entry-A
+    row stays in the driver's record. avg is decimal-routed
+    (round_stable's SQL spelling) so both engines round identically.""",
+)
 
 
 @register("sql_entry_q4", oracle=Q4_ORACLE, tags=("EP-A", "A9"))
@@ -1202,48 +889,31 @@ def sql_entry_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HISTOGRAM_ORACLE = """
+register_sql(
+    "a_histogram",
+    """
 SELECT CAST(least(floor(o_totalprice / 50000.0), 9) AS INTEGER) AS bucket,
        count(*) AS n,
        CAST(round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(28,6)), 2)
             AS DOUBLE) AS sum_price
-FROM orders
+FROM {orders}
 GROUP BY 1
 ORDER BY bucket
-"""
-
-
-@register("a_histogram", oracle=HISTOGRAM_ORACLE, tags=("A5", "A13"))
-def a_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram (feature binning): bucket =
+""",
+    tags=("A5", "A13"),
+    doc="""Fixed-width histogram (feature binning): bucket =
     least(floor(price/50k), 9). The distribution probe / binning
     primitive for feature engineering. Single hash aggregation with
     map-side partial combine — at 100 TB this is one scan + a 10-row
     shuffle. Bucket arithmetic is the same IEEE double division on
     both engines; the price sum is decimal-routed (order-independent)
-    before rounding."""
-    orders = load_table(spark, sf_dir, "orders")
-    bucket = F.least(F.floor(F.col("o_totalprice") / F.lit(50000.0)), F.lit(9)).cast(
-        "int"
-    )
-    return (
-        orders.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast(
-                    "decimal(28,6)"
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("sum_price"),
-        )
-        .orderBy("bucket")
-    )
+    before rounding.""",
+)
 
 
-STATS_MOMENTS_ORACLE = """
+register_sql(
+    "a_stats_moments",
+    """
 SELECT l_returnflag,
        count(*) AS n,
        CAST(round(CAST(stddev_samp(l_quantity) AS DECIMAL(18,6)), 2) AS DOUBLE)
@@ -1254,15 +924,12 @@ SELECT l_returnflag,
             AS DOUBLE) AS cov_qty_price,
        CAST(round(CAST(corr(l_quantity, l_extendedprice) AS DECIMAL(18,6)), 4)
             AS DOUBLE) AS corr_qty_price
-FROM lineitem
+FROM {lineitem}
 GROUP BY l_returnflag
 ORDER BY l_returnflag
-"""
-
-
-@register("a_stats_moments", oracle=STATS_MOMENTS_ORACLE, tags=("A1", "A3"))
-def a_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-moment statistical aggregates (stddev/variance/
+""",
+    tags=("A1", "A3"),
+    doc="""Second-moment statistical aggregates (stddev/variance/
     covariance/correlation) per return flag — the sample-statistics
     surface every analytics engine needs beyond sum/avg. Single hash
     aggregation with map-side partials (Spark's moment aggregates
@@ -1270,23 +937,8 @@ def a_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerically stable at any partition count). Results are
     decimal-routed through the round_stable discipline on both
     engines (accumulation-order float noise sits below the capture
-    precision)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count("*").alias("n"),
-            round_stable(F.stddev_samp("l_quantity")).alias("sd_qty"),
-            round_stable(F.var_samp("l_quantity")).alias("var_qty"),
-            round_stable(F.covar_samp("l_quantity", "l_extendedprice")).alias(
-                "cov_qty_price"
-            ),
-            round_stable(F.corr("l_quantity", "l_extendedprice"), 4).alias(
-                "corr_qty_price"
-            ),
-        )
-        .orderBy("l_returnflag")
-    )
+    precision).""",
+)
 
 
 MERGE_ORACLE = """
@@ -1327,21 +979,20 @@ def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LATEST_PER_KEY_ORACLE = """
+register_sql(
+    "w_latest_per_key",
+    """
 SELECT user_id, event_type, event_id, ts, value
 FROM (
   SELECT *, row_number() OVER (PARTITION BY user_id, event_type
                                ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
+  FROM {events}
 )
 WHERE rn = 1
 ORDER BY user_id, event_type
-"""
-
-
-@register("w_latest_per_key", oracle=LATEST_PER_KEY_ORACLE, tags=("W1", "O4"))
-def w_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest record per key (row_number = 1 per (user_id,
+""",
+    tags=("W1", "O4"),
+    doc="""Latest record per key (row_number = 1 per (user_id,
     event_type), ts desc with a deterministic event_id tie-break) —
     the QUALIFY-style compaction every CDC/event pipeline runs to
     materialize current state. One hash exchange on the key + per-key
@@ -1349,27 +1000,18 @@ def w_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (verified in the executed plan), so each map task ships
     only its per-key winner — at 100 TB the shuffle carries ~|keys|
     rows, not |events|. A sort-merge-bucketed events table makes it
-    exchange-free."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id", "ts", "value")
-        .orderBy("user_id", "event_type")
-    )
+    exchange-free.""",
+)
 
 
-NULL_SEMANTICS_ORACLE = """
+register_sql(
+    "p_null_semantics",
+    """
 WITH t AS (
   SELECT o_orderkey,
          nullif(o_custkey % 50, 0) AS prio_nn,
          CASE WHEN o_orderkey % 3 = 0 THEN NULL ELSE o_orderstatus END AS status_n
-  FROM orders
+  FROM {orders}
 )
 SELECT
   count(*) AS n,
@@ -1380,37 +1022,14 @@ SELECT
   count(coalesce(status_n, 'X')) AS n_coalesced,
   count(DISTINCT status_n) AS n_distinct_status
 FROM t
-"""
-
-
-@register("p_null_semantics", oracle=NULL_SEMANTICS_ORACLE, tags=("P6", "F9"))
-def p_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-valued-logic surface: NULLIF / COALESCE / null-safe
+""",
+    tags=("P6", "F9"),
+    doc="""Three-valued-logic surface: NULLIF / COALESCE / null-safe
     equality (<=>, ANSI IS NOT DISTINCT FROM) / COUNT-vs-COUNT(col) /
     DISTINCT-over-nulls — the semantics corner every engine must get
     identically right. Single aggregation, no shuffle beyond the
-    1-row reduce."""
-    orders = load_table(spark, sf_dir, "orders")
-    status_n = F.when(F.col("o_orderkey") % 3 == 0, F.lit(None)).otherwise(
-        F.col("o_orderstatus")
-    )
-    t = orders.select(
-        F.nullif(F.col("o_custkey") % 50, F.lit(0)).alias("prio_nn"),
-        status_n.alias("status_n"),
-    )
-    return t.agg(
-        F.count("*").alias("n"),
-        F.count("prio_nn").alias("n_prio"),
-        F.count("status_n").alias("n_status"),
-        F.count(F.when(F.col("status_n").eqNullSafe(F.lit(None)), 1)).alias(
-            "n_null_safe_null"
-        ),
-        F.count(F.when(F.col("status_n").eqNullSafe(F.lit("F")), 1)).alias(
-            "n_null_safe_f"
-        ),
-        F.count(F.coalesce(F.col("status_n"), F.lit("X"))).alias("n_coalesced"),
-        F.countDistinct("status_n").alias("n_distinct_status"),
-    )
+    1-row reduce.""",
+)
 
 
 DATE_ARITH_ORACLE = """
@@ -1531,14 +1150,16 @@ def f_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-SHARE_ORACLE = """
+register_sql(
+    "w_share_of_total",
+    """
 WITH per_nation AS (
-  SELECT n_name,
+  SELECT /*+ BROADCAST(n) */ n_name,
          CAST(round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
                          AS DECIMAL(28,6)), 2) AS DECIMAL(28,2)) AS rev_dec
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
+  FROM {orders}
+  JOIN {customer} ON o_custkey = c_custkey
+  JOIN {nation} n ON c_nationkey = n_nationkey
   GROUP BY n_name
 )
 SELECT n_name, CAST(rev_dec AS DOUBLE) AS revenue,
@@ -1546,12 +1167,9 @@ SELECT n_name, CAST(rev_dec AS DOUBLE) AS revenue,
          AS revenue_share
 FROM per_nation
 ORDER BY n_name
-"""
-
-
-@register("w_share_of_total", oracle=SHARE_ORACLE, tags=("W3", "A4"))
-def w_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Share-of-total (ratio_to_report): each nation's revenue share
+""",
+    tags=("W3", "A4"),
+    doc="""Share-of-total (ratio_to_report): each nation's revenue share
     via an unpartitioned window — applied on the AGGREGATED frame
     (|nations| rows), which is the scale-safe form: an over-()
     window on the fact table would serialize all rows into one
@@ -1560,37 +1178,13 @@ def w_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     until a single cast to double: a double-summed total accumulates
     in engine-specific order (caught as a 1-ULP share skew at
     sf0.001), while the decimal total is exact, so the share divides
-    two bit-identical doubles on both engines."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    per_nation = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast(
-                    "decimal(28,6)"
-                ),
-                2,
-            )
-            .cast("decimal(28,2)")
-            .alias("rev_dec")
-        )
-    )
-    w = Window.partitionBy()
-    return per_nation.select(
-        "n_name",
-        F.col("rev_dec").cast("double").alias("revenue"),
-        (
-            F.col("rev_dec").cast("double")
-            / F.sum("rev_dec").over(w).cast("double")
-        ).alias("revenue_share"),
-    ).orderBy("n_name")
+    two bit-identical doubles on both engines.""",
+)
 
 
-CTE_CHAIN_SQL = """
+register_sql(
+    "sql_entry_cte_chain",
+    """
 WITH flagged AS (
   SELECT l_orderkey, l_returnflag, l_quantity, l_extendedprice
   FROM {lineitem}
@@ -1610,25 +1204,18 @@ SELECT l_returnflag,
 FROM per_order
 GROUP BY l_returnflag
 ORDER BY l_returnflag
-"""
-
-
-@register(
-    "sql_entry_cte_chain",
-    oracle=CTE_CHAIN_SQL.replace("{lineitem}", "lineitem"),
+""",
     tags=("SQL-API",),
+    doc="""Multi-CTE chain through the spark.sql() entry point — the
+    WITH-clause surface verified as text. l_quantity sums are whole
+    numbers in the fixture (exact in doubles), so no rounding is
+    needed.""",
 )
-def sql_entry_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-CTE chain through the spark.sql() entry point — the
-    WITH-clause surface verified as text (same string runs on DuckDB
-    modulo table binding). l_quantity sums are whole numbers in the
-    fixture (exact in doubles), so no rounding is needed."""
-    ev = load_table(spark, sf_dir, "lineitem")
-    ev.createOrReplaceTempView("cte_lineitem")
-    return spark.sql(CTE_CHAIN_SQL.replace("{lineitem}", "cte_lineitem"))
 
 
-W_DIST_ORACLE = """
+register_sql(
+    "w_dist_functions",
+    """
 SELECT o_orderstatus, o_orderkey,
        round(cume_dist() OVER w, 6) AS cdist,
        nth_value(o_totalprice, 3) OVER (PARTITION BY o_orderstatus
@@ -1637,55 +1224,37 @@ SELECT o_orderstatus, o_orderkey,
                                                  AND UNBOUNDED FOLLOWING)
          AS third_price,
        lead(o_totalprice, 1, -1.0) OVER w AS next_price
-FROM orders
+FROM {orders}
 WHERE o_orderkey <= 2000
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey)
 ORDER BY o_orderstatus, o_totalprice DESC, o_orderkey
-"""
-
-
-@register("w_dist_functions", oracle=W_DIST_ORACLE, tags=("W-free",))
-def w_dist_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Remaining window value/distribution surface: cume_dist
+""",
+    tags=("W-free",),
+    doc="""Remaining window value/distribution surface: cume_dist
     (rank/n — integer-derived ratio, identical IEEE division on both
     engines, rounded only to normalize repr), nth_value over the full
     partition frame (needs UNBOUNDED FOLLOWING — a one-sort
     whole-partition scan, unlike the running default frame), and lead
     with an explicit default for partition-final rows. Same
     single-exchange discipline as w_value_functions: every function
-    shares one (status) partitioning and one sort."""
-    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        orders.select(
-            "o_orderstatus",
-            "o_orderkey",
-            F.round(F.cume_dist().over(w), 6).alias("cdist"),
-            F.nth_value("o_totalprice", 3).over(w_full).alias("third_price"),
-            F.lead("o_totalprice", 1, -1.0).over(w).alias("next_price"),
-        )
-        .orderBy("o_orderstatus", "cdist", "o_orderkey")
-    )
+    shares one (status) partitioning and one sort.""",
+)
 
 
-MULTI_DISTINCT_ORACLE = """
+register_sql(
+    "a_count_distinct_multi",
+    """
 SELECT l_returnflag,
        count(DISTINCT l_partkey) AS uniq_parts,
        count(DISTINCT l_suppkey) AS uniq_supps,
        count(DISTINCT (l_partkey, l_suppkey)) AS uniq_pairs,
        count(*) AS n
-FROM lineitem
+FROM {lineitem}
 GROUP BY l_returnflag
 ORDER BY l_returnflag
-"""
-
-
-@register("a_count_distinct_multi", oracle=MULTI_DISTINCT_ORACLE, tags=("A11", "A5"))
-def a_count_distinct_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Several DISTINCT aggregates with DIFFERENT argument sets in one
+""",
+    tags=("A11", "A5"),
+    doc="""Several DISTINCT aggregates with DIFFERENT argument sets in one
     query — the distinct-expand stress: Catalyst rewrites this as an
     Expand (one replica of each row per distinct group) feeding a
     two-level aggregation, so all three distinct counts and the plain
@@ -1694,21 +1263,13 @@ def a_count_distinct_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-column DISTINCT form). At scale the Expand multiplies the
     shuffle by the number of distinct groups — acceptable for a few
     groups, and the HLL sketch path (a_hll_partial_rollup) is the
-    documented fallback when it is not."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count_distinct("l_partkey").alias("uniq_parts"),
-            F.count_distinct("l_suppkey").alias("uniq_supps"),
-            F.count_distinct(F.struct("l_partkey", "l_suppkey")).alias("uniq_pairs"),
-            F.count("*").alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
+    documented fallback when it is not.""",
+)
 
 
-TRY_ARITH_ORACLE = """
+register_sql(
+    "f_try_arithmetic",
+    """
 SELECT o_orderstatus,
        count(*) AS n,
        CAST(sum(CASE WHEN o_custkey % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1718,49 +1279,21 @@ SELECT o_orderstatus,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_uncastable,
        CAST(sum(COALESCE(TRY_CAST(substring(o_orderpriority, 1, 1) AS INTEGER),
                          0)) AS BIGINT) AS sum_priority_digit
-FROM orders
+FROM {orders}
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
-"""
-
-
-@register("f_try_arithmetic", oracle=TRY_ARITH_ORACLE, tags=("F10", "F11"))
-def f_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-safe error-tolerant expressions — under Spark 4's ANSI
-    default, division by zero and bad casts THROW, so pipelines use
-    the try_* family to get null-on-error semantics row-locally
-    instead of failing the job: try_divide (null where the modulus
-    hits zero, counted and averaged over the survivors) and try_cast
+""",
+    tags=("F10", "F11"),
+    doc="""ANSI-safe error-tolerant expressions — under Spark 4's ANSI
+    default, division by zero and bad casts THROW, so pipelines guard
+    them to get null-on-error semantics row-locally instead of failing
+    the job: division by NULLIF(modulus, 0) (null where the modulus
+    hits zero, counted and averaged over the survivors) and TRY_CAST
     (the full priority string never parses as int; its leading digit
-    always does). The DuckDB twin expresses the same semantics with
-    NULLIF guards and TRY_CAST — both engines agree on null
-    propagation through the aggregates. avg is rounded (float sum
-    order); the counts and digit sums are exact integers."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(F.col("o_custkey") % 5 == 0, 1).otherwise(0)
-            ).alias("n_null_div"),
-            F.round(
-                F.avg(F.try_divide(F.col("o_totalprice"), F.col("o_custkey") % 5)), 4
-            ).alias("avg_ratio"),
-            F.sum(
-                F.when(
-                    F.expr("try_cast(o_orderpriority AS int)").isNull(), 1
-                ).otherwise(0)
-            ).alias("n_uncastable"),
-            F.sum(
-                F.coalesce(
-                    F.expr("try_cast(substring(o_orderpriority, 1, 1) AS int)"),
-                    F.lit(0),
-                )
-            ).alias("sum_priority_digit"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    always does). Both engines agree on null propagation through the
+    aggregates. avg is rounded (float sum order); the counts and digit
+    sums are exact integers.""",
+)
 
 
 J_SKEW_SALTED_ORACLE = """
@@ -1939,39 +1472,28 @@ def a_bitmap_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FREQUENT_PAIRS_ORACLE = """
+register_sql(
+    "a_frequent_pairs",
+    """
 WITH u AS (
-  SELECT DISTINCT user_id, event_type FROM events
+  SELECT DISTINCT user_id, event_type FROM {events}
 )
 SELECT a.event_type AS type_a, b.event_type AS type_b,
        CAST(count(*) AS BIGINT) AS support
 FROM u a JOIN u b ON a.user_id = b.user_id AND a.event_type < b.event_type
 GROUP BY 1, 2
 ORDER BY support DESC, type_a, type_b
-"""
-
-
-@register("a_frequent_pairs", oracle=FREQUENT_PAIRS_ORACLE, tags=("A5", "J1"))
-def a_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent co-occurrence pairs (market-basket / Apriori step 2):
+""",
+    tags=("A5", "J1"),
+    doc="""Frequent co-occurrence pairs (market-basket / Apriori step 2):
     for every pair of event types, how many users exhibit BOTH —
     the association-mining primitive behind 'users who X also Y'.
     Shape: distinct (user, type) — one exchange — then a per-user
     self-join whose fan-out is bounded by the per-user distinct-type
     count (|types| choose 2 per user, NOT |events|²; with a bounded
     type domain this is the safe small-domain pair join), and a
-    map-side-combined support count. Pure integer counts, exact."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.select("user_id", "event_type").distinct()
-    a = u.select("user_id", F.col("event_type").alias("type_a"))
-    b = u.select("user_id", F.col("event_type").alias("type_b"))
-    return (
-        a.join(b, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count("*").cast("long").alias("support"))
-        .orderBy(F.desc("support"), "type_a", "type_b")
-    )
+    map-side-combined support count. Pure integer counts, exact.""",
+)
 
 
 PERCENTILE_DISC_ORACLE = """

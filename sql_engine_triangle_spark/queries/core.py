@@ -21,51 +21,40 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sql_engine_triangle_spark.catalog import load_table
 from sql_engine_triangle_spark.functions.scalar import round_stable
-from sql_engine_triangle_spark.queries.registry import register
+from sql_engine_triangle_spark.queries.registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # Q1 — aggregation by type (scan → filter → group-agg → scalar fn → sort)
 # Covers S-scan, P3 range predicate, A1-A3/A5, F1 round, O1.
 # ---------------------------------------------------------------------------
 
-Q1_ORACLE = """
+Q1_SQL = """
 SELECT
   l_returnflag,
   count(*) AS cnt,
   CAST(round(CAST(avg(l_extendedprice) AS DECIMAL(18,6)), 2) AS DOUBLE) AS avg_price,
   round(min(l_extendedprice), 2) AS min_price,
   round(max(l_extendedprice), 2) AS max_price
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 GROUP BY l_returnflag
 ORDER BY avg_price DESC, l_returnflag
 """
 
-
-@register("q1_agg_by_type", oracle=Q1_ORACLE, tags=("P3", "A1", "A2", "A3", "A5", "F1", "O1"))
-def q1_agg_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference Q1: range filter → single-key group → count/avg/min/max
+register_sql(
+    "q1_agg_by_type",
+    Q1_SQL,
+    tags=("P3", "A1", "A2", "A3", "A5", "F1", "O1"),
+    doc="""Reference Q1: range filter → single-key group → count/avg/min/max
     → order by derived aggregate DESC (q1 README.md:50-62).
 
     Scale: filter + partial agg happen map-side inside one codegen
     stage; the shuffle carries only |distinct l_returnflag| rows.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count("*").alias("cnt"),
-            round_stable(F.avg("l_extendedprice")).alias("avg_price"),
-            F.round(F.min("l_extendedprice"), 2).alias("min_price"),
-            F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-        )
-        .orderBy(F.desc("avg_price"), "l_returnflag")
-    )
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -74,41 +63,25 @@ def q1_agg_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Covers P5, P8, A6, A7, F2, O2.
 # ---------------------------------------------------------------------------
 
-Q2_ORACLE = """
+register_sql(
+    "q2_town_month_rollup",
+    """
 SELECT
   o_orderpriority,
   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
   count(*) AS cnt,
   CAST(round(CAST(avg(o_totalprice) AS DECIMAL(18,6)), 2) AS DOUBLE) AS avg_total
-FROM orders
+FROM {orders}
 WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
   AND o_orderdate >= TIMESTAMP '1997-01-01'
 GROUP BY o_orderpriority, CAST(date_trunc('month', o_orderdate) AS DATE)
 ORDER BY o_orderpriority, month
-"""
-
-
-@register("q2_town_month_rollup", oracle=Q2_ORACLE, tags=("P5", "P8", "A6", "A7", "F2", "O2"))
-def q2_town_month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference Q2: selective IN-list + date range, rollup by
+""",
+    tags=("P5", "P8", "A6", "A7", "F2", "O2"),
+    doc="""Reference Q2: selective IN-list + date range, rollup by
     (town, month) (q2 README.md:50-62). `o_orderpriority` plays town;
-    `date_trunc('month', ...)` is the time bucket (F2)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.filter(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-            & (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        )
-        .groupBy(
-            "o_orderpriority",
-            F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            round_stable(F.avg("o_totalprice")).alias("avg_total"),
-        )
-        .orderBy("o_orderpriority", "month")
-    )
+    `date_trunc('month', ...)` is the time bucket (F2).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -116,14 +89,16 @@ def q2_town_month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Covers A7 (year bucket), W1, W2, W3, F1, F3, F11.
 # ---------------------------------------------------------------------------
 
-Q3_ORACLE = """
+register_sql(
+    "q3_yoy_window",
+    """
 WITH yearly AS (
   SELECT
     l_returnflag,
     CAST(year(l_shipdate) AS INTEGER) AS yr,
     CAST(round(CAST(avg(l_extendedprice) AS DECIMAL(18,6)), 2) AS DOUBLE) AS avg_price,
     count(*) AS cnt
-  FROM lineitem
+  FROM {lineitem}
   GROUP BY l_returnflag, CAST(year(l_shipdate) AS INTEGER)
 )
 SELECT
@@ -138,36 +113,14 @@ SELECT
 FROM yearly
 WINDOW w AS (PARTITION BY l_returnflag ORDER BY yr)
 ORDER BY l_returnflag, yr
-"""
-
-
-@register("q3_yoy_window", oracle=Q3_ORACLE, tags=("A7", "W1", "W2", "W3", "F3", "F11"))
-def q3_yoy_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference Q3: two-phase execution — aggregate to (type, year)
+""",
+    tags=("A7", "W1", "W2", "W3", "F3", "F11"),
+    doc="""Reference Q3: two-phase execution — aggregate to (type, year)
     grain, then LAG window over the tiny intermediate
     (q3 README.md:33-38, 60-82). The window runs after aggregation,
     so its input is |types|×|years| rows — trivially cheap at any
-    scale; the heavy lifting is the partial+final aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    yearly = (
-        li.groupBy(
-            "l_returnflag",
-            F.year("l_shipdate").alias("yr"),
-        ).agg(
-            round_stable(F.avg("l_extendedprice")).alias("avg_price"),
-            F.count("*").alias("cnt"),
-        )
-    )
-    w = Window.partitionBy("l_returnflag").orderBy("yr")
-    prev = F.lag("avg_price").over(w)
-    return (
-        yearly.withColumn("yoy_delta", F.round(F.col("avg_price") - prev, 2))
-        .withColumn(
-            "yoy_pct",
-            round_stable(F.lit(100.0) * (F.col("avg_price") - prev) / prev),
-        )
-        .orderBy("l_returnflag", "yr")
-    )
+    scale; the heavy lifting is the partial+final aggregation.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 from sql_engine_triangle_spark.catalog import load_table
 from sql_engine_triangle_spark.concurrency import scale_checkpoint
 from sql_engine_triangle_spark.operators import dedup, similarity, textops, tokenize
-from sql_engine_triangle_spark.queries.registry import register
+from sql_engine_triangle_spark.queries.registry import register, register_sql
 
 # Shared oracle CTEs: the seed set is the k lowest-vec_id vectors
 # with k = GREATEST(8, n // 2048) — the SAME corpus-size-dependent
@@ -183,22 +183,21 @@ def pipeline_shard_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOMAIN_CAP_ORACLE = """
+register_sql(
+    "curation_domain_cap",
+    """
 SELECT doc_id, source, n_chars, CAST(rk AS BIGINT) AS rk
 FROM (
   SELECT doc_id, source, n_chars,
          row_number() OVER (PARTITION BY source
                             ORDER BY n_chars DESC, doc_id) AS rk
-  FROM documents
+  FROM {documents}
 )
 WHERE rk <= 50
 ORDER BY source, rk
-"""
-
-
-@register("curation_domain_cap", oracle=DOMAIN_CAP_ORACLE, tags=("LLM-pipeline", "W1"))
-def curation_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap — the over-represented-source
+""",
+    tags=("LLM-pipeline", "W1"),
+    doc="""Per-domain document cap — the over-represented-source
     down-weighting rule every web-corpus recipe applies (keep at most
     N docs per domain, best-first): row_number per source ordered by
     (n_chars desc, doc_id), keep rank <= 50. One exchange on the
@@ -206,15 +205,8 @@ def curation_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     BELOW the exchange (each map task forwards at most 50 rows per
     source), so a head domain with 10^9 docs ships 50×parallelism
     rows, not 10^9 — the cap is what makes the op skew-proof, and the
-    optimization is asserted in tests/test_plans.py."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.desc("n_chars"), "doc_id")
-    return (
-        docs.select("doc_id", "source", "n_chars")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 50)
-        .orderBy("source", "rk")
-    )
+    optimization is asserted in tests/test_plans.py.""",
+)
 
 
 GOPHER_RULES_ORACLE = r"""
@@ -1575,9 +1567,11 @@ def ml_kmeans_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOMAIN_CONCENTRATION_ORACLE = """
+register_sql(
+    "curation_domain_concentration",
+    """
 WITH c AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS cnt FROM documents GROUP BY source
+  SELECT source, CAST(count(*) AS BIGINT) AS cnt FROM {documents} GROUP BY source
 ),
 tot AS (SELECT sum(cnt) AS n, sum(cnt * cnt) AS sumsq,
                count(*) AS n_sources, max(cnt) AS top_cnt
@@ -1589,16 +1583,9 @@ SELECT CAST(n_sources AS BIGINT) AS n_sources,
        CAST(sumsq AS DOUBLE) / (n * n) AS hhi,
        CAST(top_cnt AS BIGINT) AS top_source_docs
 FROM tot
-"""
-
-
-@register(
-    "curation_domain_concentration",
-    oracle=DOMAIN_CONCENTRATION_ORACLE,
+""",
     tags=("LLM-pipeline", "A4"),
-)
-def curation_domain_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-concentration report (Herfindahl index over the corpus'
+    doc="""Source-concentration report (Herfindahl index over the corpus'
     domain mix) — the diversity metric a curation run watches to know
     whether the domain cap is needed at all: HHI near 1/n_sources is
     balanced, near 1 is a one-domain corpus. Emitted as the exact
@@ -1607,20 +1594,8 @@ def curation_domain_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     one IEEE division, bit-identical across engines with no rounding.
     One map-side-combined source count, one 1-row rollup; at 100 TB
     this is a metadata-sized report off the same counts the domain
-    cap already computes."""
-    docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("source").agg(F.count("*").cast("long").alias("cnt"))
-    return c.agg(
-        F.count("*").cast("long").alias("n_sources"),
-        F.sum("cnt").cast("long").alias("n_docs"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("hhi_num"),
-        (F.sum("cnt") * F.sum("cnt")).cast("long").alias("hhi_den"),
-        (
-            F.sum(F.col("cnt") * F.col("cnt")).cast("double")
-            / (F.sum("cnt") * F.sum("cnt"))
-        ).alias("hhi"),
-        F.max("cnt").cast("long").alias("top_source_docs"),
-    )
+    cap already computes.""",
+)
 
 
 DATASET_CARD_ORACLE = r"""

@@ -19,165 +19,98 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_engine_triangle_spark.catalog import load_table
-from sql_engine_triangle_spark.queries.registry import register
+from sql_engine_triangle_spark.queries.registry import register, register_sql
 
-_REVENUE_SQL = "sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))"
-
-
-def _revenue_col() -> F.Column:
-    return F.sum(
-        (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-            "decimal(18,4)"
-        )
-    )
-
-
-TPCH_Q3_ORACLE = f"""
-SELECT l_orderkey,
-       CAST(round({_REVENUE_SQL}, 2) AS DOUBLE) AS revenue,
+register_sql(
+    "tpch_q3_shipping_priority",
+    """
+SELECT /*+ BROADCAST(c) */ l_orderkey,
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
        CAST(o_orderdate AS DATE) AS odate
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {customer} c ON c_custkey = o_custkey
 WHERE c_mktsegment = 'BUILDING'
   AND o_orderdate < TIMESTAMP '1998-01-01'
   AND l_shipdate  > TIMESTAMP '1998-01-01'
 GROUP BY l_orderkey, CAST(o_orderdate AS DATE)
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10
-"""
-
-
-@register("tpch_q3_shipping_priority", oracle=TPCH_Q3_ORACLE, tags=("J1", "A4", "O3"))
-def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: un-shipped high-revenue orders for one market
+""",
+    tags=("J1", "A4", "O3"),
+    doc="""TPC-H Q3 shape: un-shipped high-revenue orders for one market
     segment. customer (filtered, broadcast) ⋈ orders ⋈ lineitem, one
-    fact shuffle on the order key, top-10 via TakeOrderedAndProject."""
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", F.col("o_orderdate").cast("date").alias("odate"))
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("revenue"))
-        .select("l_orderkey", "revenue", "odate")
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
+    fact shuffle on the order key, top-10 via TakeOrderedAndProject.""",
+)
 
 
-TPCH_Q5_ORACLE = f"""
-SELECT n_name,
-       CAST(round({_REVENUE_SQL}, 2) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
+register_sql(
+    "tpch_q5_local_supplier_volume",
+    """
+SELECT /*+ BROADCAST(c, s, n, r) */ n_name,
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {customer} c ON c_custkey = o_custkey
+JOIN {supplier} s ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {nation}   n ON s_nationkey = n_nationkey
+JOIN {region}   r ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <  TIMESTAMP '1998-01-01'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
-"""
-
-
-@register("tpch_q5_local_supplier_volume", oracle=TPCH_Q5_ORACLE, tags=("J1", "A4", "A6"))
-def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue from orders where the supplier and the
+""",
+    tags=("J1", "A4", "A6"),
+    doc="""TPC-H Q5 shape: revenue from orders where the supplier and the
     customer share a nation, per nation in one region. Six-table join
     — the join-ordering stress: lineitem⋈orders is the only
     fact-sized exchange; customer/supplier/nation/region broadcast,
     with the local-supplier condition (c_nationkey = s_nationkey)
-    applied as a join predicate, not a post-filter."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey)
-            & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
-    )
+    applied as a join predicate, not a post-filter.""",
+)
 
 
-TPCH_Q10_ORACLE = f"""
-SELECT c_custkey, c_name,
-       CAST(round({_REVENUE_SQL}, 2) AS DOUBLE) AS lost_revenue,
+register_sql(
+    "tpch_q10_returned_items",
+    """
+SELECT /*+ BROADCAST(c, n) */ c_custkey, c_name,
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS lost_revenue,
        n_name
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation   ON c_nationkey = n_nationkey
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {customer} c ON c_custkey = o_custkey
+JOIN {nation}   n ON c_nationkey = n_nationkey
 WHERE l_returnflag = 'R'
   AND o_orderdate >= TIMESTAMP '1997-01-01'
   AND o_orderdate <  TIMESTAMP '1997-07-01'
 GROUP BY c_custkey, c_name, n_name
 ORDER BY lost_revenue DESC, c_custkey
 LIMIT 20
-"""
-
-
-@register("tpch_q10_returned_items", oracle=TPCH_Q10_ORACLE, tags=("J1", "A4", "O3"))
-def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returns
+""",
+    tags=("J1", "A4", "O3"),
+    doc="""TPC-H Q10 shape: top-20 customers by revenue lost to returns
     in one quarter-window. Returned-flag filter pushes to the
-    lineitem scan; dims broadcast; top-20 via TakeOrderedAndProject."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nat = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("lost_revenue"))
-        .select("c_custkey", "c_name", "lost_revenue", "n_name")
-        .orderBy(F.desc("lost_revenue"), "c_custkey")
-        .limit(20)
-    )
+    lineitem scan; dims broadcast; top-20 via TakeOrderedAndProject.""",
+)
 
 
-TPCH_Q7_ORACLE = f"""
+register_sql(
+    "tpch_q7_volume_shipping",
+    """
 SELECT supp_nation, cust_nation, yr,
-       CAST(round({_REVENUE_SQL}, 2) AS DOUBLE) AS revenue
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
 FROM (
-  SELECT n1.n_name AS supp_nation,
+  SELECT /*+ BROADCAST(s, c, n1, n2) */ n1.n_name AS supp_nation,
          n2.n_name AS cust_nation,
          CAST(year(l_shipdate) AS INTEGER) AS yr,
          l_extendedprice, l_discount
-  FROM lineitem
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders   ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  FROM {lineitem}
+  JOIN {supplier} s ON s_suppkey = l_suppkey
+  JOIN {orders}   ON o_orderkey = l_orderkey
+  JOIN {customer} c ON c_custkey = o_custkey
+  JOIN {nation} n1 ON s_nationkey = n1.n_nationkey
+  JOIN {nation} n2 ON c_nationkey = n2.n_nationkey
   WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
     AND l_shipdate >= TIMESTAMP '1996-01-01'
@@ -185,12 +118,9 @@ FROM (
 ) shipping
 GROUP BY supp_nation, cust_nation, yr
 ORDER BY supp_nation, cust_nation, yr
-"""
-
-
-@register("tpch_q7_volume_shipping", oracle=TPCH_Q7_ORACLE, tags=("J1", "A4", "A6"))
-def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by
+""",
+    tags=("J1", "A4", "A6"),
+    doc="""TPC-H Q7 shape: bilateral trade volume between two nations by
     ship year. The nation table joins the fact TWICE under different
     roles (supplier's vs customer's nation) with a disjunctive
     cross-pair predicate — the self-join-of-a-dimension stress the
@@ -198,55 +128,31 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the only fact-sized exchange is lineitem⋈orders. The
     pair predicate prunes to two nations BEFORE the fact join (filter
     on the broadcast side), so at 100 TB the join output — not the
-    scan — is what shrinks."""
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    ).filter(F.col("supp_nation").isin("NATION_1", "NATION_2"))
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
-    ).filter(F.col("cust_nation").isin("NATION_1", "NATION_2"))
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), supp.s_nationkey == n1.s_nkey)
-        .join(F.broadcast(n2), cust.c_nationkey == n2.c_nkey)
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("yr"),
-        )
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "yr")
-    )
+    scan — is what shrinks.""",
+)
 
 
-TPCH_Q8_ORACLE = """
+register_sql(
+    "tpch_q8_market_share",
+    """
 SELECT yr,
        CAST(round(
          CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume
                        ELSE CAST(0.0000 AS DECIMAL(18,4)) END) AS DOUBLE)
          / CAST(sum(volume) AS DOUBLE), 6) AS DOUBLE) AS mkt_share
 FROM (
-  SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
+  SELECT /*+ BROADCAST(p, s, c, n1, r, n2) */
+         CAST(year(o_orderdate) AS INTEGER) AS yr,
          CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)) AS volume,
          n2.n_name AS supp_nation
-  FROM part
-  JOIN lineitem ON l_partkey = p_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders   ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region   ON n1.n_regionkey = r_regionkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+  FROM {part} p
+  JOIN {lineitem} ON l_partkey = p_partkey
+  JOIN {supplier} s ON s_suppkey = l_suppkey
+  JOIN {orders}   ON o_orderkey = l_orderkey
+  JOIN {customer} c ON c_custkey = o_custkey
+  JOIN {nation} n1 ON c_nationkey = n1.n_nationkey
+  JOIN {region}   r ON n1.n_regionkey = r_regionkey
+  JOIN {nation} n2 ON s_nationkey = n2.n_nationkey
   WHERE r_name = 'EUROPE'
     AND p_type = 'PROMO'
     AND o_orderdate >= TIMESTAMP '1996-01-01'
@@ -254,170 +160,74 @@ FROM (
 ) all_nations
 GROUP BY yr
 ORDER BY yr
-"""
-
-
-@register("tpch_q8_market_share", oracle=TPCH_Q8_ORACLE, tags=("J1", "A4", "F6"))
-def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one nation's market share of a part type in
+""",
+    tags=("J1", "A4", "F6"),
+    doc="""TPC-H Q8 shape: one nation's market share of a part type in
     one region's customer market, by order year. Eight-relation join
     (nation twice) with a conditional-aggregate ratio — share =
     sum(volume WHERE supplier is NATION_3) / sum(volume). Every
     relation but lineitem⋈orders broadcasts; the ratio is computed
     from two decimal sums in ONE aggregation pass (no second scan,
     no self-join), then divided as DOUBLE — exact accumulation,
-    one rounding at the very end."""
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
-    )
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    volume = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    zero = F.lit("0.0000").cast("decimal(18,4)")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), cust.c_nationkey == n1.c_nkey)
-        .join(F.broadcast(reg), n1.c_rkey == reg.r_regionkey)
-        .join(F.broadcast(n2), supp.s_nationkey == n2.s_nkey)
-        .select(
-            F.year("o_orderdate").alias("yr"),
-            volume.alias("volume"),
-            "supp_nation",
-        )
-        .groupBy("yr")
-        .agg(
-            F.round(
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(
-                        zero
-                    )
-                ).cast("double")
-                / F.sum("volume").cast("double"),
-                6,
-            )
-            .cast("double")
-            .alias("mkt_share")
-        )
-        .orderBy("yr")
-    )
+    one rounding at the very end.""",
+)
 
 
-TPCH_Q14_ORACLE = """
-SELECT CAST(round(
+register_sql(
+    "tpch_q14_promo_revenue",
+    """
+SELECT /*+ BROADCAST(p) */ CAST(round(
          100.00 * CAST(sum(CASE WHEN p_type = 'PROMO'
                      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))
                      ELSE CAST(0.0000 AS DECIMAL(18,4)) END) AS DOUBLE)
          / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE),
        4) AS DOUBLE) AS promo_revenue_pct
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
+FROM {lineitem}
+JOIN {part} p ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-03-01'
   AND l_shipdate <  TIMESTAMP '1997-04-01'
-"""
-
-
-@register("tpch_q14_promo_revenue", oracle=TPCH_Q14_ORACLE, tags=("J1", "A4", "F1"))
-def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: share of one month's revenue from promo
+""",
+    tags=("J1", "A4", "F1"),
+    doc="""TPC-H Q14 shape: share of one month's revenue from promo
     parts. Global (no-key) conditional-aggregate ratio: the ship-month
     filter pushes to the lineitem scan, part broadcasts, and both the
     numerator and denominator come out of one partial+final
-    aggregation — a two-task reduce regardless of fact size."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    part = load_table(spark, sf_dir, "part")
-    volume = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    zero = F.lit("0.0000").cast("decimal(18,4)")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(volume.alias("volume"), "p_type")
-        .agg(
-            F.round(
-                F.lit(100.00)
-                * F.sum(
-                    F.when(F.col("p_type") == "PROMO", F.col("volume")).otherwise(zero)
-                ).cast("double")
-                / F.sum("volume").cast("double"),
-                4,
-            )
-            .cast("double")
-            .alias("promo_revenue_pct")
-        )
-    )
+    aggregation — a two-task reduce regardless of fact size.""",
+)
 
 
-TPCH_Q15_ORACLE = f"""
+register_sql(
+    "tpch_q15_top_supplier",
+    """
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
-         {_REVENUE_SQL} AS total_revenue
-  FROM lineitem
+         sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS total_revenue
+  FROM {lineitem}
   WHERE l_shipdate >= TIMESTAMP '1997-01-01'
     AND l_shipdate <  TIMESTAMP '1997-04-01'
   GROUP BY l_suppkey
+),
+ranked AS (
+  SELECT supplier_no, total_revenue,
+         max(total_revenue) OVER () AS max_revenue
+  FROM revenue
 )
-SELECT s_suppkey, s_name,
+SELECT /*+ BROADCAST(s) */ s_suppkey, s_name,
        CAST(round(total_revenue, 2) AS DOUBLE) AS total_revenue
-FROM supplier
-JOIN revenue ON s_suppkey = supplier_no
-WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+FROM ranked
+JOIN {supplier} s ON s_suppkey = supplier_no
+WHERE total_revenue = max_revenue
 ORDER BY s_suppkey
-"""
-
-
-@register("tpch_q15_top_supplier", oracle=TPCH_Q15_ORACLE, tags=("J1", "A4", "O3"))
-def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with maximum quarter revenue
+""",
+    tags=("J1", "A4", "O3"),
+    doc="""TPC-H Q15 shape: the supplier(s) with maximum quarter revenue
     (ties kept — max-equality, not LIMIT 1). One fact aggregation by
     l_suppkey, then an unpartitioned window-max over the AGGREGATED
     frame — |suppliers| rows, not fact rows, so the single-partition
     window is bounded by dimension cardinality at any scale (the same
     reasoning that rejects it over raw facts in pipeline_pack_
-    sequences). Supplier dim broadcasts onto the winners."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    from pyspark.sql import Window
-
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _revenue_col().alias("total_revenue")
-    )
-    winners = (
-        revenue.withColumn(
-            "max_rev", F.max("total_revenue").over(Window.partitionBy())
-        )
-        .filter(F.col("total_revenue") == F.col("max_rev"))
-        .drop("max_rev")
-    )
-    return (
-        winners.join(F.broadcast(supp), winners.supplier_no == supp.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.round("total_revenue", 2).cast("double").alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
+    sequences). Supplier dim broadcasts onto the winners.""",
+)
 
 
 TPCH_Q12_ORACLE = """
@@ -461,47 +271,36 @@ def tpch_q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q19_ORACLE = """
-SELECT CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2)
+register_sql(
+    "tpch_q19_disjunctive_join",
+    """
+SELECT /*+ BROADCAST(p) */
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2)
        AS DOUBLE) AS revenue
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
+FROM {lineitem}
+JOIN {part} p ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
        AND l_quantity >= 1 AND l_quantity <= 11)
    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
        AND l_quantity >= 10 AND l_quantity <= 20)
    OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
        AND l_quantity >= 20 AND l_quantity <= 30)
-"""
-
-
-@register("tpch_q19_disjunctive_join", oracle=TPCH_Q19_ORACLE, tags=("J1", "P6", "A4"))
-def tpch_q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape (adapted: fixture part has no container, so the
+""",
+    tags=("J1", "P6", "A4"),
+    doc="""TPC-H Q19 shape (adapted: fixture part has no container, so the
     brand/size/quantity bands carry the disjunction): revenue under an
     OR-of-ANDs predicate mixing columns from both join sides. Catalyst
     pushes the derivable single-side residuals (brand∈{...} to the
     part scan, quantity∈[1,30] to the lineitem scan) below the join
     and keeps the cross-side disjunction as the join filter — the
     predicate-decomposition behavior the reference lab measures on
-    its engines' OR filters."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    q = F.col("l_quantity")
-    sz = F.col("p_size")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & sz.between(1, 5) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & sz.between(1, 10) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#3") & sz.between(1, 15) & q.between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .filter(cond)
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("revenue"))
-    )
+    its engines' OR filters.""",
+)
 
 
-TPCH_Q1_ORACLE = """
+register_sql(
+    "tpch_q1_pricing_summary",
+    """
 SELECT l_returnflag, l_linestatus,
        CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty,
        CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
@@ -514,164 +313,86 @@ SELECT l_returnflag, l_linestatus,
        CAST(round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
                   / count(*), 6) AS DOUBLE) AS avg_price,
        count(*) AS count_order
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate <= TIMESTAMP '2001-09-01'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
-"""
-
-
-@register("tpch_q1_pricing_summary", oracle=TPCH_Q1_ORACLE, tags=("A4", "A5", "F1"))
-def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Literal TPC-H Q1 (pricing summary report) — the canonical
+""",
+    tags=("A4", "A5", "F1"),
+    doc="""Literal TPC-H Q1 (pricing summary report) — the canonical
     full-scan aggregation: four decimal-routed sums (incl. the
     tax-compounded charge), two averages, and a count per
     (returnflag, linestatus). One scan, partial+final HashAggregate,
     ~6 output rows; averages are computed as exact-decimal-sum /
     count divided as DOUBLE so both engines agree bit-for-bit after
-    one terminal rounding."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp")
-    )
-    dec = lambda c: c.cast("decimal(18,4)")  # noqa: E731
-    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = disc * (F.lit(1.0) + F.col("l_tax"))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(dec(F.col("l_quantity"))), 2).cast("double").alias("sum_qty"),
-            F.round(F.sum(dec(F.col("l_extendedprice"))), 2)
-            .cast("double")
-            .alias("sum_base_price"),
-            F.round(F.sum(dec(disc)), 2).cast("double").alias("sum_disc_price"),
-            # 6-dp decimal: price/discount/tax are 2-dp each, so the
-            # EXACT 3-factor product is a multiple of 1e-6 — the cast
-            # is then exact on both engines (a DECIMAL(18,4) cast hits
-            # representable .xxxx5 ties where Spark rounds HALF_UP and
-            # DuckDB half-even: one-cent skew, caught at sf0.001).
-            F.round(F.sum(charge.cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_charge"),
-            F.round(
-                F.sum(dec(F.col("l_quantity"))).cast("double") / F.count("*"), 6
-            )
-            .cast("double")
-            .alias("avg_qty"),
-            F.round(
-                F.sum(dec(F.col("l_extendedprice"))).cast("double") / F.count("*"), 6
-            )
-            .cast("double")
-            .alias("avg_price"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    one terminal rounding.""",
+)
 
 
-TPCH_Q4_ORACLE = """
+register_sql(
+    "tpch_q4_order_priority",
+    """
 SELECT o_orderpriority, count(*) AS order_count
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '1997-01-01'
   AND o_orderdate <  TIMESTAMP '1997-07-01'
   AND EXISTS (
-    SELECT 1 FROM lineitem
+    SELECT 1 FROM {lineitem}
     WHERE l_orderkey = o_orderkey
       AND l_shipdate > CAST(o_orderdate AS TIMESTAMP) + INTERVAL 60 DAY
   )
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-"""
-
-
-@register("tpch_q4_order_priority", oracle=TPCH_Q4_ORACLE, tags=("J3", "A5"))
-def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape (adapted: no commitdate in the fixture, so the
+""",
+    tags=("J3", "A5"),
+    doc="""TPC-H Q4 shape (adapted: no commitdate in the fixture, so the
     'late' EXISTS predicate is shipped >60 days after order): order
     counts per priority where at least one line shipped late. The
     EXISTS compiles to a LEFT SEMI join keyed l_orderkey — each order
     contributes once regardless of how many late lines it has, which
     a plain inner join would get wrong. The cross-side date predicate
-    rides the semi-join condition."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    late = (
-        orders.join(
-            li,
-            (li.l_orderkey == orders.o_orderkey)
-            & (li.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-            "left_semi",
-        )
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
+    rides the semi-join condition.""",
+)
 
 
-TPCH_Q6_ORACLE = """
+register_sql(
+    "tpch_q6_forecast_revenue",
+    """
 SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))), 2)
        AS DOUBLE) AS revenue
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_shipdate <  TIMESTAMP '1998-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
-"""
-
-
-@register("tpch_q6_forecast_revenue", oracle=TPCH_Q6_ORACLE, tags=("P3", "P6", "A4"))
-def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 (forecasting revenue change): a pure scan-filter-sum
+""",
+    tags=("P3", "P6", "A4"),
+    doc="""TPC-H Q6 (forecasting revenue change): a pure scan-filter-sum
     with three conjunctive range predicates — the predicate-pushdown
     showcase. All three predicates reach the parquet scan as
     PushedFilters (row-group min/max pruning at scale); the plan is
     scan → filter → two-task partial+final sum with NO join and NO
-    wide exchange."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                        "decimal(18,4)"
-                    )
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
+    wide exchange.""",
+)
 
 
-TPCH_Q13_ORACLE = """
+register_sql(
+    "tpch_q13_customer_distribution",
+    """
 SELECT c_count, count(*) AS custdist
 FROM (
   SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o
+  FROM {customer} c
+  LEFT JOIN {orders} o
     ON c.c_custkey = o.o_custkey
    AND o.o_orderpriority <> '4-NOT SPECIFIED'
   GROUP BY c.c_custkey
 )
 GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
-"""
-
-
-@register("tpch_q13_customer_distribution", oracle=TPCH_Q13_ORACLE, tags=("J1", "A5"))
-def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: the distribution of per-customer order counts
+""",
+    tags=("J1", "A5"),
+    doc="""TPC-H Q13 shape: the distribution of per-customer order counts
     (adapted: the excluded-comment predicate becomes an
     order-priority exclusion). The LEFT join is load-bearing — it
     preserves zero-order customers as c_count=0, which an inner join
@@ -679,33 +400,22 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     the null-extended rows count as zero. Two aggregations: the
     per-customer count shuffles on the join key it already has; the
     distribution aggregation reduces |customers| rows to a handful of
-    counts."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "4-NOT SPECIFIED"
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
+    counts.""",
+)
 
 
-TPCH_Q22_ORACLE = """
+register_sql(
+    "tpch_q22_idle_customers",
+    """
 WITH avg_bal AS (
-  SELECT avg(c_acctbal) AS ab FROM customer WHERE c_acctbal > 0.0
+  SELECT avg(c_acctbal) AS ab FROM {customer} WHERE c_acctbal > 0.0
 ),
 eligible AS (
-  SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-  FROM customer c, avg_bal
+  SELECT /*+ BROADCAST(avg_bal) */ c.c_custkey, c.c_nationkey, c.c_acctbal
+  FROM {customer} c, avg_bal
   WHERE c.c_acctbal > avg_bal.ab
     AND NOT EXISTS (
-      SELECT 1 FROM orders o
+      SELECT 1 FROM {orders} o
       WHERE o.o_custkey = c.c_custkey
         AND o.o_orderdate >= TIMESTAMP '2001-01-01'
     )
@@ -715,12 +425,9 @@ SELECT c_nationkey AS cntry, count(*) AS numcust,
 FROM eligible
 GROUP BY c_nationkey
 ORDER BY cntry
-"""
-
-
-@register("tpch_q22_idle_customers", oracle=TPCH_Q22_ORACLE, tags=("J3", "A4", "A5"))
-def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity; adapted: country
+""",
+    tags=("J3", "A4", "A5"),
+    doc="""TPC-H Q22 shape (global sales opportunity; adapted: country
     code = c_nationkey, no phone column in the fixture; 'no orders
     ever' is empty here because every fixture customer orders, so the
     anti-condition is DORMANCY — no orders since 2001-01-01, ~19% of
@@ -730,53 +437,31 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global average enters as a broadcast 1-row aggregate (scalar
     subquery), and NOT EXISTS compiles to a LEFT ANTI join on the
     customer key. c_acctbal is 2-dp money, so the DECIMAL(18,2) cast
-    is exact and the sum order-independent."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.avg("c_acctbal").alias("ab")
-    )
-    recent = orders.filter(
-        F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
-    )
-    eligible = (
-        cust.join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-    )
-    return (
-        eligible.groupBy(F.col("c_nationkey").alias("cntry"))
-        .agg(
-            F.count("*").alias("numcust"),
-            F.round(F.sum(F.col("c_acctbal").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("totacctbal"),
-        )
-        .orderBy("cntry")
-    )
+    is exact and the sum order-independent.""",
+)
 
 
-TPCH_Q17_ORACLE = """
+register_sql(
+    "tpch_q17_small_quantity",
+    """
 WITH pavg AS (
-  SELECT l_partkey AS pk, 0.2 * avg(l_quantity) AS qty_bar
-  FROM lineitem
-  JOIN part ON p_partkey = l_partkey
+  SELECT /*+ BROADCAST(p) */ l_partkey AS pk, 0.2 * avg(l_quantity) AS qty_bar
+  FROM {lineitem}
+  JOIN {part} p ON p_partkey = l_partkey
   WHERE p_brand = 'Brand#3' AND p_size <= 15
   GROUP BY l_partkey
 )
-SELECT CAST(round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+SELECT /*+ BROADCAST(p, pavg) */
+       CAST(round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
                   / 7.0, 2) AS DOUBLE) AS avg_yearly
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
+FROM {lineitem}
+JOIN {part} p ON p_partkey = l_partkey
 JOIN pavg ON pk = l_partkey
 WHERE p_brand = 'Brand#3' AND p_size <= 15
   AND l_quantity < qty_bar
-"""
-
-
-@register("tpch_q17_small_quantity", oracle=TPCH_Q17_ORACLE, tags=("J1", "A4", "A7"))
-def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (adapted: brand + size band instead of the
+""",
+    tags=("J1", "A4", "A7"),
+    doc="""TPC-H Q17 shape (adapted: brand + size band instead of the
     missing container column): revenue locked in small-quantity
     orders, where 'small' is CORRELATED — below 20% of that part's
     own average quantity. The correlated aggregate decorrelates into
@@ -785,122 +470,72 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-valued and per-part line counts are small, so the
     average's double sum is EXACT regardless of accumulation order —
     the 0.2·avg threshold compares identically on both engines with
-    no rounding needed."""
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 15)
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    sel = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    pavg = sel.groupBy(F.col("l_partkey").alias("pk")).agg(
-        (F.lit(0.2) * F.avg("l_quantity")).alias("qty_bar")
-    )
-    return (
-        sel.join(F.broadcast(pavg), sel.l_partkey == pavg.pk)
-        .filter(F.col("l_quantity") < F.col("qty_bar"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-                / 7.0,
-                2,
-            )
-            .cast("double")
-            .alias("avg_yearly")
-        )
-    )
+    no rounding needed.""",
+)
 
 
-TPCH_Q21_ORACLE = """
-SELECT s_name, count(DISTINCT l1.l_orderkey) AS numwait
-FROM lineitem l1
-JOIN orders   ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
-JOIN supplier ON s_suppkey = l1.l_suppkey
-WHERE l1.l_shipdate > CAST(o_orderdate AS TIMESTAMP) + INTERVAL 60 DAY
-  AND EXISTS (
-    SELECT 1 FROM lineitem l2
+register_sql(
+    "tpch_q21_waiting_supplier",
+    """
+WITH late AS (
+  SELECT l_orderkey, l_suppkey
+  FROM {lineitem}
+  JOIN {orders} ON o_orderkey = l_orderkey AND o_orderstatus = 'F'
+  WHERE l_shipdate > CAST(o_orderdate AS TIMESTAMP) + INTERVAL 60 DAY
+)
+SELECT /*+ BROADCAST(s) */ s_name, count(DISTINCT l1.l_orderkey) AS numwait
+FROM late l1
+JOIN {supplier} s ON s_suppkey = l1.l_suppkey
+WHERE EXISTS (
+    SELECT 1 FROM {lineitem} l2
     WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
   )
   AND NOT EXISTS (
-    SELECT 1 FROM lineitem l3
+    SELECT 1 FROM late l3
     WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-      AND l3.l_shipdate > CAST(o_orderdate AS TIMESTAMP) + INTERVAL 60 DAY
   )
 GROUP BY s_name
 ORDER BY numwait DESC, s_name
 LIMIT 10
-"""
-
-
-@register("tpch_q21_waiting_supplier", oracle=TPCH_Q21_ORACLE, tags=("J3", "A5", "O3"))
-def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (adapted lateness: shipped >60 days after the
+""",
+    tags=("J3", "A5", "O3"),
+    doc="""TPC-H Q21 shape (adapted lateness: shipped >60 days after the
     order, as in Q4/Q12): suppliers who SOLELY held up multi-supplier
     orders — a late line, at least one other supplier on the order
     (EXISTS → LeftSemi), and no OTHER supplier late on it (NOT
     EXISTS → LeftAnti). The classic double-correlated-subquery
     stress: both subqueries correlate on l_orderkey AND the outer
     row's l_suppkey, so each becomes a self-join keyed on the order
-    with a supplier-inequality residual. Orders are counted DISTINCT
-    per supplier (a supplier with two late lines on one order waits
-    once). Three passes over lineitem, all shuffled on the SAME
-    l_orderkey key — Catalyst reuses the partitioning across the
-    semi/anti joins rather than re-exchanging."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    late1 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .select("l_orderkey", "l_suppkey", "o_orderdate")
-    )
-    l2 = li.select(
-        F.col("l_orderkey").alias("k2"), F.col("l_suppkey").alias("s2")
-    )
-    has_other = late1.join(
-        l2,
-        (F.col("l_orderkey") == F.col("k2")) & (F.col("l_suppkey") != F.col("s2")),
-        "left_semi",
-    )
-    late3 = late1.select(
-        F.col("l_orderkey").alias("k3"), F.col("l_suppkey").alias("s3")
-    )
-    sole_late = has_other.join(
-        late3,
-        (F.col("l_orderkey") == F.col("k3")) & (F.col("l_suppkey") != F.col("s3")),
-        "left_anti",
-    )
-    return (
-        sole_late.join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count_distinct("l_orderkey").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(10)
-    )
+    with a supplier-inequality residual. The late lines are one CTE,
+    used by the outer query and the NOT EXISTS alike: an anti-join
+    correlated on the outer o_orderdate could not filter its side and
+    would ship all of lineitem. Orders are counted DISTINCT per
+    supplier (a supplier with two late lines on one order waits
+    once).""",
+)
 
 
-TPCH_Q9_ORACLE = f"""
+register_sql(
+    "tpch_q9_product_profit",
+    """
 SELECT nation, yr,
-       CAST(round({_REVENUE_SQL}, 2) AS DOUBLE) AS profit
+       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS profit
 FROM (
-  SELECT n_name AS nation,
+  SELECT /*+ BROADCAST(p, s, n) */ n_name AS nation,
          CAST(year(o_orderdate) AS INTEGER) AS yr,
          l_extendedprice, l_discount
-  FROM lineitem
-  JOIN part     ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders   ON o_orderkey = l_orderkey
-  JOIN nation   ON s_nationkey = n_nationkey
+  FROM {lineitem}
+  JOIN {part}     p ON p_partkey = l_partkey
+  JOIN {supplier} s ON s_suppkey = l_suppkey
+  JOIN {orders}   ON o_orderkey = l_orderkey
+  JOIN {nation}   n ON s_nationkey = n_nationkey
   WHERE p_name LIKE '%bolt%'
 )
 GROUP BY nation, yr
 ORDER BY nation, yr DESC
-"""
-
-
-@register("tpch_q9_product_profit", oracle=TPCH_Q9_ORACLE, tags=("J1", "A4", "P7"))
-def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (adapted: no partsupp table in the fixture, so
+""",
+    tags=("J1", "A4", "P7"),
+    doc="""TPC-H Q9 shape (adapted: no partsupp table in the fixture, so
     profit omits the supply-cost term and reduces to discounted
     revenue — the JOIN TREE and the LIKE-driven part pruning are what
     this entry exercises): product-line profit by supplier nation and
@@ -908,21 +543,5 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes the part dimension BEFORE it broadcasts (a contains
     filter cannot push to parquet min/max, but it shrinks the
     broadcast build side); the only fact-sized exchange is the final
-    (nation, yr) aggregation after lineitem⋈orders."""
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("bolt"))
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    nat = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("yr"),
-        )
-        .agg(F.round(_revenue_col(), 2).cast("double").alias("profit"))
-        .orderBy("nation", F.desc("yr"))
-    )
+    (nation, yr) aggregation after lineitem⋈orders.""",
+)

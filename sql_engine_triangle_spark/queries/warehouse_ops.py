@@ -22,9 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_engine_triangle_spark.catalog import load_table
-from sql_engine_triangle_spark.queries.registry import register
+from sql_engine_triangle_spark.queries.registry import register, register_sql
 
-SCD2_ORACLE = """
+register_sql(
+    "w_scd2_history",
+    """
 SELECT user_id,
        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
          AS version,
@@ -34,15 +36,12 @@ SELECT user_id,
          AS effective_to,
        lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
          AS is_current
-FROM events
+FROM {events}
 WHERE event_type = 'purchase'
 ORDER BY user_id, version
-"""
-
-
-@register("w_scd2_history", oracle=SCD2_ORACLE, tags=("W1", "W3"))
-def w_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 slowly-changing-dimension history: each user's purchase
+""",
+    tags=("W1", "W3"),
+    doc="""Type-2 slowly-changing-dimension history: each user's purchase
     stream becomes versioned validity intervals — effective_from = the
     event, effective_to = the NEXT event (NULL = current row), the
     standard lead()-closure every warehouse uses to build dimension
@@ -51,22 +50,8 @@ def w_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks equal timestamps so version numbering is deterministic.
     At 100 TB: dimension history builds are bounded by the entity key
     cardinality, and the single hash exchange on that key is the
-    minimum any engine needs; no self-join, no range explosion."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select(
-            "user_id",
-            F.row_number().over(w).alias("version"),
-            "value",
-            F.col("ts").alias("effective_from"),
-            F.lead("ts").over(w).alias("effective_to"),
-            F.lead("ts").over(w).isNull().alias("is_current"),
-        )
-        .orderBy("user_id", "version")
-    )
+    minimum any engine needs; no self-join, no range explosion.""",
+)
 
 
 SESSIONIZE_ORACLE = """
@@ -182,28 +167,27 @@ def f_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q18_ORACLE = """
+register_sql(
+    "tpch_q18_big_orders",
+    """
 WITH big AS (
   SELECT l_orderkey, CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
            AS sum_qty
-  FROM lineitem
+  FROM {lineitem}
   GROUP BY l_orderkey
   HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 250
 )
-SELECT c_custkey, c_name, o_orderkey,
+SELECT /*+ BROADCAST(c) */ c_custkey, c_name, o_orderkey,
        CAST(o_orderdate AS DATE) AS odate,
        o_totalprice, sum_qty
 FROM big
-JOIN orders   ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
+JOIN {orders}   ON o_orderkey = l_orderkey
+JOIN {customer} c ON c_custkey = o_custkey
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 20
-"""
-
-
-@register("tpch_q18_big_orders", oracle=TPCH_Q18_ORACLE, tags=("J1", "A4", "A13", "O3"))
-def tpch_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape (large-volume customers): orders whose total
+""",
+    tags=("J1", "A4", "A13", "O3"),
+    doc="""TPC-H Q18 shape (large-volume customers): orders whose total
     line quantity exceeds a threshold, joined back to orders+customer
     for reporting. The defining feature vs Q3/Q5/Q10 is HAVING on a
     FACT-side aggregate — the fact table aggregates FIRST (partial+
@@ -212,30 +196,8 @@ def tpch_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot reorder into and which an engine must get right to avoid
     shuffling the whole fact twice. Quantities sum as DECIMAL (exact,
     order-independent, tpch_like.py discipline). Top-20 via
-    TakeOrderedAndProject."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("_sq"))
-        .filter(F.col("_sq") > 250)
-        .select("l_orderkey", F.col("_sq").cast("double").alias("sum_qty"))
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").alias("odate"),
-            "o_totalprice",
-            "sum_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(20)
-    )
+    TakeOrderedAndProject.""",
+)
 
 
 def _zorder_oracle() -> str:
@@ -523,16 +485,20 @@ def w_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-OHLC_ORACLE = """
-WITH ranked AS (
-  SELECT event_type,
-         date_trunc('hour', ts) AS bar_ts,
-         value,
-         row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+register_sql(
+    "a_ohlc_bars",
+    """
+WITH bars AS (
+  SELECT event_type, date_trunc('hour', ts) AS bar_ts, ts, event_id, value
+  FROM {events}
+),
+ranked AS (
+  SELECT event_type, bar_ts, value,
+         row_number() OVER (PARTITION BY event_type, bar_ts
                             ORDER BY ts, event_id) AS rn_a,
-         row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+         row_number() OVER (PARTITION BY event_type, bar_ts
                             ORDER BY ts DESC, event_id DESC) AS rn_d
-  FROM events
+  FROM bars
 )
 SELECT event_type, bar_ts,
        max(CASE WHEN rn_a = 1 THEN value END) AS open,
@@ -543,12 +509,9 @@ SELECT event_type, bar_ts,
 FROM ranked
 GROUP BY event_type, bar_ts
 ORDER BY event_type, bar_ts
-"""
-
-
-@register("a_ohlc_bars", oracle=OHLC_ORACLE, tags=("A2", "A6", "W1"))
-def a_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OHLC candlestick bars — the canonical timeseries downsample
+""",
+    tags=("A2", "A6", "W1"),
+    doc="""OHLC candlestick bars — the canonical timeseries downsample
     (open/high/low/close per hour per series): positional endpoints
     (first/last by (ts, event_id)) come from two row_number windows
     over ONE (series, hour) partitioning — Spark evaluates both in a
@@ -556,31 +519,8 @@ def a_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition; the second direction is a reversed scan, not a second
     exchange) — folded into the same aggregation that takes high/low.
     Values pass through raw (no float arithmetic), so no rounding is
-    needed anywhere."""
-    from pyspark.sql.window import Window as Wnd
-
-    ev = load_table(spark, sf_dir, "events")
-    bar = F.date_trunc("hour", F.col("ts"))
-    base = ev.select(
-        "event_type", bar.alias("bar_ts"), "value", "ts", "event_id"
-    )
-    wa = Wnd.partitionBy("event_type", "bar_ts").orderBy("ts", "event_id")
-    wd = Wnd.partitionBy("event_type", "bar_ts").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    return (
-        base.withColumn("rn_a", F.row_number().over(wa))
-        .withColumn("rn_d", F.row_number().over(wd))
-        .groupBy("event_type", "bar_ts")
-        .agg(
-            F.max(F.when(F.col("rn_a") == 1, F.col("value"))).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"),
-            F.count("*").alias("n_ticks"),
-        )
-        .orderBy("event_type", "bar_ts")
-    )
+    needed anywhere.""",
+)
 
 
 GAP_FILL_ORACLE = """
@@ -1426,10 +1366,12 @@ def w_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUTOCORR_TERMS_ORACLE = """
+register_sql(
+    "a_autocorr_terms",
+    """
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
+  FROM {events} GROUP BY 1
 ),
 p AS (
   SELECT c AS x,
@@ -1443,12 +1385,9 @@ SELECT CAST(count(*) AS BIGINT) AS n_pairs,
        CAST(sum(x * x) AS BIGINT) AS sum_x2,
        CAST(sum(y * y) AS BIGINT) AS sum_y2
 FROM p WHERE y IS NOT NULL
-"""
-
-
-@register("a_autocorr_terms", oracle=AUTOCORR_TERMS_ORACLE, tags=("A4", "W1"))
-def a_autocorr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 autocorrelation of the daily event-count series, emitted
+""",
+    tags=("A4", "W1"),
+    doc="""Lag-1 autocorrelation of the daily event-count series, emitted
     as the six EXACT integer moment terms (n, Σx, Σy, Σxy, Σx², Σy²)
     rather than the float r — the sqrt/division in Pearson's r is
     engine-divergent, but every moment of an integer series is a
@@ -1457,30 +1396,15 @@ def a_autocorr_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-moments trick is the same lift that made MAD and the
     iterative algorithms oracle-able. Shape: one day rollup, one
     1-partition lead over the BOUNDED daily series (|days| rows —
-    metadata, not facts), one 1-row rollup."""
-    from pyspark.sql.window import Window as Wnd
-
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count("*").cast("long").alias("c")
-    )
-    w = Wnd.orderBy("day")
-    p = d.select(
-        F.col("c").alias("x"), F.lead("c").over(w).alias("y")
-    ).filter(F.col("y").isNotNull())
-    return p.agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.sum("x").cast("long").alias("sum_x"),
-        F.sum("y").cast("long").alias("sum_y"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sum_xy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sum_x2"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("sum_y2"),
-    )
+    metadata, not facts), one 1-row rollup.""",
+)
 
 
-STREAK_ORACLE = """
+register_sql(
+    "w_longest_streak",
+    """
 WITH d AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM {events}
 ),
 g AS (
   SELECT user_id, day,
@@ -1498,37 +1422,16 @@ SELECT user_id,
 FROM streaks
 GROUP BY user_id
 ORDER BY user_id
-"""
-
-
-@register("w_longest_streak", oracle=STREAK_ORACLE, tags=("W1", "A5"))
-def w_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-day activity streak per user — the
+""",
+    tags=("W1", "A5"),
+    doc="""Longest consecutive-day activity streak per user — the
     engagement metric every product warehouse computes, and the
     canonical date-arithmetic gaps-and-islands: distinct active days,
     then `day - row_number` is CONSTANT within a consecutive run (the
     classic trick — no lag/flag chain needed), so one group-by of
     that difference yields the streaks. One user_id exchange; all
-    integer day arithmetic."""
-    from pyspark.sql.window import Window as Wnd
-
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
-    w = Wnd.partitionBy("user_id").orderBy("day")
-    g = d.withColumn(
-        "grp", F.date_sub(F.col("day"), F.row_number().over(w))
-    )
-    streaks = g.groupBy("user_id", "grp").agg(
-        F.count("*").cast("long").alias("len")
-    )
-    return (
-        streaks.groupBy("user_id")
-        .agg(
-            F.max("len").cast("long").alias("longest_streak_days"),
-            F.count("*").cast("long").alias("n_streaks"),
-        )
-        .orderBy("user_id")
-    )
+    integer day arithmetic.""",
+)
 
 
 TABLE_CHECKSUM_ORACLE = """
@@ -1617,12 +1520,14 @@ def a_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LINEAR_TREND_ORACLE = """
+register_sql(
+    "a_linear_trend",
+    """
 WITH d AS (
   SELECT event_type,
          CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
          CAST(count(*) AS BIGINT) AS y
-  FROM events
+  FROM {events}
   GROUP BY 1, 2
 ),
 m AS (
@@ -1642,12 +1547,9 @@ SELECT event_type, n_days, sx, sy, sxy, sxx,
          / CAST(nullif(n_days * sxx - sx * sx, 0) AS DOUBLE) AS slope_per_day
 FROM m
 ORDER BY event_type
-"""
-
-
-@register("a_linear_trend", oracle=LINEAR_TREND_ORACLE, tags=("A5", "W2"))
-def a_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group least-squares TREND: the slope of daily event counts
+""",
+    tags=("A5", "W2"),
+    doc="""Per-group least-squares TREND: the slope of daily event counts
     over time per event_type — the volume-trend detector behind
     "is this source growing or dying" curation decisions. Same
     discipline as a_autocorr_terms: the regression reduces to five
@@ -1659,43 +1561,8 @@ def a_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup (map-side combined), then one bounded moments pass —
     output is |event_type| rows at any corpus size. Epoch-day x
     values keep every product well inside BIGINT (x ~ 2e4, n ~ 4e2:
-    n·Σx² ~ 5e13)."""
-    ev = load_table(spark, sf_dir, "events")
-    d = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-            .cast("long")
-            .alias("x"),
-        )
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    m = d.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_days"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    num = F.col("n_days") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.col("n_days") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return m.select(
-        "event_type",
-        "n_days",
-        "sx",
-        "sy",
-        "sxy",
-        "sxx",
-        num.cast("long").alias("slope_num"),
-        den.cast("long").alias("slope_den"),
-        # Single-active-day groups have den == 0: a bare division would
-        # throw DIVIDE_BY_ZERO under the driver's bare ANSI session while
-        # the oracle returned NULL — guard BOTH sides identically
-        # (nullif in the SQL above), so such groups yield NULL everywhere.
-        (
-            num.cast("double") / F.nullif(den, F.lit(0)).cast("double")
-        ).alias("slope_per_day"),
-    ).orderBy("event_type")
+    n·Σx² ~ 5e13).""",
+)
 
 
 BLOOM_PREFILTER_ORACLE = """
@@ -2067,27 +1934,16 @@ def f_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One SQL text, both engines: {events} binds to a Spark temp view in
-# the entry and to the DuckDB view in the oracle — the same
-# portable-construct discipline as sql_entry_cte_chain.
-SQL_FUNNEL_TEXT = WINDOW_FUNNEL_ORACLE.replace("FROM events", "FROM {events}")
-
-
-@register(
+register_sql(
     "sql_entry_window_funnel",
-    oracle=SQL_FUNNEL_TEXT.replace("{events}", "events"),
+    WINDOW_FUNNEL_ORACLE.replace("FROM events", "FROM {events}"),
     tags=("SQL-API", "W1"),
-)
-def sql_entry_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """w_window_funnel through the spark.sql() ENTRY POINT — the
-    ordered-sequence funnel as one SQL text that runs verbatim on
+    doc="""w_window_funnel's oracle through the spark.sql() ENTRY POINT —
+    the ordered-sequence funnel as one SQL text that runs verbatim on
     both engines (CTEs, INTERVAL arithmetic, scalar-subquery counts,
     UNION ALL — all portable constructs), verifying the SQL-API
-    surface carries the same semantics as the DataFrame form. The
-    planner output is the same as w_window_funnel's (Catalyst
-    compiles both to the identical logical plan)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("funnel_events")
-    return spark.sql(SQL_FUNNEL_TEXT.replace("{events}", "funnel_events"))
+    surface carries the same semantics as the DataFrame form.""",
+)
 
 
 DEGREE_DIST_ORACLE = """

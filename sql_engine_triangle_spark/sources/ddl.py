@@ -34,17 +34,18 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 
 
-def create_external_table(
-    spark: SparkSession, name: str, location: str, partitioned: bool = False
-) -> None:
-    """S7: register an external parquet table at `location`. Schema
-    AND partition columns are inferred from the Hive-style layout
-    (Spark forbids PARTITIONED BY without an explicit column list);
-    partitioned tables get an MSCK REPAIR to load the partitions
-    into the catalog."""
+def create_external_table(spark: SparkSession, name: str, location: str) -> set[str]:
+    """S7: register an external parquet table at ``location`` (a path
+    on the driver's file system) and return its partition directory
+    names. Schema AND partition columns are inferred from the
+    Hive-style layout (Spark forbids PARTITIONED BY without an explicit
+    column list). Spark recovers no partition at CREATE time, so they
+    are added here from one listing of ``location`` — the ALTER TABLE
+    form runs no job, where MSCK REPAIR runs one."""
     spark.sql(f"CREATE TABLE IF NOT EXISTS {name} USING parquet LOCATION '{location}'")
-    if partitioned:
-        spark.sql(f"MSCK REPAIR TABLE {name}")
+    names = _partition_dirs(location) if os.path.isdir(location) else set()
+    _add_partitions(spark, name, names)
+    return names
 
 
 def drop_table_if_exists(spark: SparkSession, name: str) -> None:
@@ -98,7 +99,6 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
         reg = _TABLES.get(key)
         try:
             st = os.stat(path)
-            names = _partition_dirs(path)
         except FileNotFoundError:
             if reg is not None:
                 drop_table_if_exists(spark, f"`{reg.name}`")
@@ -109,9 +109,10 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
         if reg is None or reg.root != root:
             name = "_open_table_" + hashlib.sha1(path.encode()).hexdigest()[:16]
             drop_table_if_exists(spark, f"`{name}`")
-            create_external_table(spark, f"`{name}`", path)
-            reg = _TABLES[key] = _Registration(name, root)
-        _sync_partitions(spark, reg, names)
+            names = create_external_table(spark, f"`{name}`", path)
+            reg = _TABLES[key] = _Registration(name, root, names)
+        else:
+            _sync_partitions(spark, reg, _partition_dirs(path))
         spark.catalog.refreshTable(reg.name)
         return spark.table(reg.name)
 
@@ -142,16 +143,21 @@ def _partition_spec(dirname: str) -> str:
     return f"PARTITION (`{col}` = '{value}')"
 
 
+def _add_partitions(spark: SparkSession, table: str, names: set[str]) -> None:
+    if names:
+        specs = " ".join(_partition_spec(n) for n in sorted(names))
+        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS {specs}")
+
+
 def _sync_partitions(spark: SparkSession, reg: _Registration, names: set[str]) -> None:
     """Add and drop catalog partitions so they match ``names``. An
     EXTERNAL table keeps the files of a dropped partition."""
-    added, dropped = sorted(names - reg.partitions), sorted(reg.partitions - names)
-    if added:
-        specs = " ".join(_partition_spec(n) for n in added)
-        spark.sql(f"ALTER TABLE `{reg.name}` ADD IF NOT EXISTS {specs}")
+    table = f"`{reg.name}`"
+    _add_partitions(spark, table, names - reg.partitions)
+    dropped = sorted(reg.partitions - names)
     if dropped:
         specs = ", ".join(_partition_spec(n) for n in dropped)
-        spark.sql(f"ALTER TABLE `{reg.name}` DROP IF EXISTS {specs}")
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
     reg.partitions = names
 
 

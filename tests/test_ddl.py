@@ -65,7 +65,7 @@ def test_monthly_partition_ddl_templating():
 
 def test_partitioned_external_table_prunes(spark, tmp_path):
     """S7 + pruning: write a partitioned dataset, register it as an
-    external partitioned table, check partition pruning in SQL."""
+    external table, check partition pruning in SQL."""
     li = spark.read.parquet(table_path(SF_DIR, "lineitem"))
     out = str(tmp_path / "li_part")
     (
@@ -75,9 +75,49 @@ def test_partitioned_external_table_prunes(spark, tmp_path):
         .parquet(out)
     )
     ddl.drop_table_if_exists(spark, "li_part")
-    ddl.create_external_table(spark, "li_part", out, partitioned=True)
+    ddl.create_external_table(spark, "li_part", out)
     df = spark.sql("SELECT count(*) AS n FROM li_part WHERE month = '199701'")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert df.head().n > 0
     ddl.drop_table_if_exists(spark, "li_part")
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_partitioned_directory_registers_every_partition(spark, tmp_path):
+    """Spark's CREATE TABLE over a Hive-partitioned directory records
+    the partition column but recovers no partition, so the table reads
+    0 rows. Registration adds every partition from one listing, with
+    no flag to pass and no Spark job beyond CREATE TABLE's own schema
+    inference."""
+    out = str(tmp_path / "parts")
+    spark.range(30).withColumn("p", F.col("id") % 3).write.partitionBy("p").parquet(out)
+    for name in ("parts_bare", "parts"):
+        ddl.drop_table_if_exists(spark, name)
+    bare = _job_ids(
+        spark,
+        "create-bare",
+        lambda: spark.sql(f"CREATE TABLE parts_bare USING parquet LOCATION '{out}'"),
+    )
+    assert spark.table("parts_bare").count() == 0
+    names: set[str] = set()
+    registered = _job_ids(
+        spark,
+        "create-registered",
+        lambda: names.update(ddl.create_external_table(spark, "parts", out)),
+    )
+    assert names == {"p=0", "p=1", "p=2"}
+    assert len(registered) == len(bare)
+    assert spark.table("parts").count() == 30
+    assert spark.sql("SELECT count(*) AS n FROM parts WHERE p = 1").head().n == 10
+    for name in ("parts_bare", "parts"):
+        ddl.drop_table_if_exists(spark, name)

@@ -24,6 +24,19 @@ def test_engine_three_entry_points_agree(spark):
     assert eng.oracle("q1_agg_by_type") is not None
 
 
+def test_engines_on_one_session_read_their_own_tables(spark):
+    """Two Engines over different scale factors on one session: each
+    Engine.sql reads its own sf_dir however the calls interleave."""
+    small, big = Engine(spark, SF_DIR_SMALL), Engine(spark, SF_DIR)
+    q = "SELECT count(*) AS n FROM lineitem"
+    n_small = small.sql(q).head().n
+    n_big = big.sql(q).head().n
+    assert n_small == small.table("lineitem").count()
+    assert n_big == big.table("lineitem").count() > n_small
+    assert small.sql(q).head().n == n_small
+    assert big.sql(q).head().n == n_big
+
+
 def test_stateful_running_totals_matches_batch(spark):
     """applyInPandasWithState running totals: after consuming the
     whole stream, per-user state equals the batch groupBy totals."""

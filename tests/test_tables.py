@@ -146,7 +146,7 @@ def test_two_threads_register_once(spark, tmp_path, monkeypatch):
 
     def counting(*args, **kwargs):
         created.append(args[1])
-        real(*args, **kwargs)
+        return real(*args, **kwargs)
 
     monkeypatch.setattr(ddl, "create_external_table", counting)
     want = _rows(spark.read.parquet(path))
