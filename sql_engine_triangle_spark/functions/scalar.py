@@ -34,7 +34,7 @@ def yyyymm(col: Column) -> Column:
     """ClickHouse ``toYYYYMM`` (F4, 01-create-table.sql:72) — the
     derived partition column used for monthly partition pruning. The
     one definition of the transform: ``sources.ingest.month_col``
-    renders it as the directory text, and ``date_since`` derives its
+    renders it as the directory text, and ``date_since_sql`` derives its
     pruning bound from it."""
     return F.date_format(col, "yyyyMM").cast("int")
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 import numbers
+import os
 
 import numpy as np
 import pandas as pd
@@ -360,12 +361,30 @@ def ivf_centroids(emb: DataFrame, k: int = 10, iters: int = 3) -> np.ndarray:
     return C
 
 
-# Built IVF quantizers, keyed by (corpus key, n_centroids) — the
-# index-build-once model every IVF system (FAISS/Milvus/pgvector
-# ivfflat) uses: the coarse quantizer is constructed once per corpus
-# and persisted; queries only probe + rerank. Deterministic build
-# (fixed init, fixed iterations) makes the cache exact.
-_CENTROID_CACHE: dict[tuple[str, int], np.ndarray] = {}
+# Built IVF quantizers: (path of the vectors' files, n_centroids) ->
+# (version of those files, centroids) — the index-build-once model
+# every IVF system (FAISS/Milvus/pgvector ivfflat) uses: the coarse
+# quantizer is constructed once per corpus and persisted; queries only
+# probe + rerank. Deterministic build (fixed init, fixed iterations)
+# makes the cache exact while the files are unchanged; a rewrite
+# changes their version and replaces the entry.
+_CENTROID_CACHE: dict[tuple[str, int], tuple[tuple, np.ndarray]] = {}
+
+
+def files_version(path: str) -> tuple:
+    """Names, sizes and mtimes (ns) of the file at ``path``, or of the
+    files in the directory at ``path``: one ``os.scandir``, no Spark
+    job. A rewrite of the files changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    version = []
+    with os.scandir(path) as entries:
+        for e in entries:
+            if e.is_file():
+                st = e.stat()
+                version.append((e.name, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(version))
 
 
 def ivf_topk(
@@ -375,7 +394,7 @@ def ivf_topk(
     n_centroids: int = 10,
     nprobe: int = 3,
     exclude_id: int | None = None,
-    cache_key: str | None = None,
+    cache_path: str | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: probe the nprobe centroids nearest the
     query, exact-rerank only vectors assigned to them. On the fixture
@@ -383,15 +402,20 @@ def ivf_topk(
     shape for mid-similarity embeddings (sign-LSH needs
     high-similarity neighbors to bucket together).
 
-    ``cache_key`` (e.g. the corpus path) enables quantizer reuse
-    across calls — the production IVF lifecycle, where the index is
-    built once and queries amortize it."""
-    if cache_key is not None and (cache_key, n_centroids) in _CENTROID_CACHE:
-        C = _CENTROID_CACHE[(cache_key, n_centroids)]
-    else:
+    ``cache_path``, the path of the files ``emb`` reads, enables
+    quantizer reuse across calls — the production IVF lifecycle, where
+    the index is built once and queries amortize it. The quantizer is
+    built again when ``files_version(cache_path)`` changed."""
+    if cache_path is None:
         C = ivf_centroids(emb, k=n_centroids)
-        if cache_key is not None:
-            _CENTROID_CACHE[(cache_key, n_centroids)] = C
+    else:
+        # The version is read before the build: files rewritten during
+        # it leave an entry the next call replaces.
+        key, version = (os.path.abspath(cache_path), n_centroids), files_version(cache_path)
+        cached = _CENTROID_CACHE.get(key)
+        if cached is None or cached[0] != version:
+            cached = _CENTROID_CACHE[key] = (version, ivf_centroids(emb, k=n_centroids))
+        C = cached[1]
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     qn = np.asarray(qvec) / np.linalg.norm(qvec)
     probe = [int(i) for i in np.argsort(-(Cn @ qn))[:nprobe]]

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sql_engine_triangle_spark.catalog import load_table
+from sql_engine_triangle_spark.catalog import load_table, table_path
 from sql_engine_triangle_spark.concurrency import (
     checkpoint_all,
     scale_checkpoint,
@@ -1270,8 +1270,9 @@ LIMIT 10
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-10: deterministic distributed k-means
     coarse quantizer, nprobe=3 probe, exact rerank of ~30% of
-    vectors. The quantizer is cached per sf_dir (index-build-once
-    lifecycle — repeated queries pay only probe + rerank).
+    vectors. The quantizer is cached per embeddings path and built
+    again when those files change (index-build-once lifecycle —
+    repeated queries pay only probe + rerank).
 
     Driver-visible validation form: rows are the EXACT top-10
     (oracle-computable), plus ``ivf_recall_ok`` (recall@10 ≥ 7/10 vs
@@ -1291,7 +1292,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.brute_force_topk(emb, qvec, k=10, exclude_id=0)
     ivf_ids = [
         r.vec_id
-        for r in similarity.ivf_topk(emb, qvec, k=10, exclude_id=0, cache_key=sf_dir)
+        for r in similarity.ivf_topk(
+            emb, qvec, k=10, exclude_id=0, cache_path=table_path(sf_dir, "embeddings")
+        )
         .select("vec_id")
         .collect()
     ]

@@ -15,20 +15,33 @@ deliberate, documented deviations:
    the lab's bare `ORDER BY cnt DESC LIMIT 10` is nondeterministic
    when two counties tie on count.
 
-The date filters are built with `sources.ingest.date_since`, so on a
-table partitioned by `month_col` each scan opens only the months the
-filter can match (the lab's `PARTITION BY toYYYYMM(date)` pruning);
-on a flat table they are the plain date predicates. The table is
-read through the catalog handle ``sources.ddl.open_table``: its
-schema and partitions come from catalog metadata, so building a query
-runs no Spark job and lists only the partitions the filter keeps.
+Each query is one SQL text, run by ``spark.sql`` over the table
+``sources.ddl.open_table`` registers for the path: one parse and one
+analysis, where a DataFrame builder analyzes each call. Its schema and
+partitions come from catalog metadata, so building a query runs no
+Spark job and lists only the partitions the filter keeps. The date
+filters are written by ``sources.ingest.date_since_sql``: on a table
+partitioned by ``month_col`` each scan opens only the months the
+filter can match (the lab's ``PARTITION BY toYYYYMM(date)`` pruning);
+on a flat table they are the plain date predicates. The DuckDB oracles
+of Q1-Q3 (``Q*_SQL``) are the same texts with the lab's table name and
+date predicate and no hint; Q4's is the lab's form (below).
 
-Each query ends in ``_ordered``: its result is coalesced to one
-partition and sorted inside that one task. A global ``orderBy`` would
-plan a range exchange and a sampling job for results this small; each
-result is bounded by its number of groups (Q1: the 5 types; Q2: 5
-towns x months; Q3: types x years; Q4: 10 counties x types), whatever
-the table's size.
+On Spark each text coalesces its aggregate to one partition (its
+``{hint}``, ``/*+ COALESCE(1) */``) and ends in ``ORDER BY``, which
+then sorts inside that one task: a sort over more partitions would
+plan a range exchange and a sampling job for results this small. Each result is bounded by
+its number of groups (Q1: the 5 types; Q2: 5 towns x months; Q3:
+types x years; Q4: 10 counties x types), whatever the table's size.
+
+Q4 differs from the lab's text in plan, not in result. The lab reads
+the month partitions twice, once for the top-counties CTE and once for
+the grouped aggregate joined to it. Here one scan aggregates every
+(county, type) group, so the percentiles are computed for every
+county; the groups are then folded per county and the counties ranked
+by (count DESC, county) as in the lab's CTE, and the first 10 are
+unfolded again. The rows are the lab's, with no second scan and no
+broadcast join.
 
 Kept OUTSIDE the driver registry (the driver's sf dirs don't contain
 property_sales; the fixture is generated deterministically in tests)
@@ -38,12 +51,10 @@ tests/test_reference_parity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame, SparkSession
 
-from sql_engine_triangle_spark.sources.ddl import open_table
-from sql_engine_triangle_spark.sources.ingest import date_since
+from sql_engine_triangle_spark.sources.ddl import open_table, table_name
+from sql_engine_triangle_spark.sources.ingest import date_since_sql
 
 Q2_TOWNS = ["LONDON", "MANCHESTER", "BRISTOL", "BIRMINGHAM", "NOTTINGHAM"]
 
@@ -52,76 +63,60 @@ def load_property_sales(spark: SparkSession, path: str) -> DataFrame:
     return open_table(spark, path)
 
 
-def _ordered(df: DataFrame, *cols) -> DataFrame:
-    # The final ORDER BY in one task, with no range exchange. Only for
-    # results bounded by a number of groups (module doc): at most a
-    # few hundred rows here.
-    return df.coalesce(1).sortWithinPartitions(*cols)
+def _run(spark: SparkSession, path: str, text: str, day: str) -> DataFrame:
+    ps = load_property_sales(spark, path)
+    return spark.sql(
+        text.format(
+            hint="/*+ COALESCE(1) */ ",
+            table=f"`{table_name(path)}`",
+            since=date_since_sql(ps, day),
+        )
+    )
 
 
-def _round0(col: Column) -> Column:
-    # decimal-routed 0-digit round (deviation 1 in the module doc)
-    return F.round(col.cast("decimal(28,6)")).cast("double")
+def _oracle(text: str, day: str) -> str:
+    # The lab's form of a text: its table name and date predicate.
+    return text.format(hint="", table="property_sales", since=f"date >= DATE '{day}'")
 
 
 # --- Q1: aggregation by type (q1 README.md:50-62) ----------------------------
 
-Q1_SQL = """
-SELECT type,
+Q1_TEXT = """
+SELECT {hint}type,
        count(*) AS transactions,
        CAST(round(CAST(avg(price) AS DECIMAL(28,6))) AS DOUBLE) AS avg_price,
        CAST(round(CAST(min(price) AS DECIMAL(28,6))) AS DOUBLE) AS min_price,
        CAST(round(CAST(max(price) AS DECIMAL(28,6))) AS DOUBLE) AS max_price
-FROM property_sales
-WHERE date >= DATE '2020-01-01'
+FROM {table}
+WHERE {since}
 GROUP BY type
 ORDER BY avg_price DESC, type
 """
+Q1_SQL = _oracle(Q1_TEXT, "2020-01-01")
 
 
 def q1(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path)
-    return (
-        ps.filter(date_since(ps, "2020-01-01"))
-        .groupBy("type")
-        .agg(
-            F.count("*").alias("transactions"),
-            _round0(F.avg("price")).alias("avg_price"),
-            _round0(F.min("price")).alias("min_price"),
-            _round0(F.max("price")).alias("max_price"),
-        )
-        .transform(_ordered, F.desc("avg_price"), "type")
-    )
+    return _run(spark, path, Q1_TEXT, "2020-01-01")
 
 
 # --- Q2: town/month rollup (q2 README.md:50-62) ------------------------------
 
-Q2_SQL = f"""
-SELECT town,
+Q2_TEXT = f"""
+SELECT {{hint}}town,
        CAST(date_trunc('month', date) AS DATE) AS month,
        count(*) AS transactions,
        CAST(round(CAST(avg(price) AS DECIMAL(28,6))) AS DOUBLE) AS avg_price
-FROM property_sales
+FROM {{table}}
 WHERE town IN ({', '.join(repr(t) for t in Q2_TOWNS)})
-  AND date >= DATE '2020-01-01'
+  AND {{since}}
 GROUP BY town, CAST(date_trunc('month', date) AS DATE)
 ORDER BY town, month
 """
+Q2_SQL = _oracle(Q2_TEXT, "2020-01-01")
 
 
 def q2(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path)
-    return (
-        ps.filter(F.col("town").isin(Q2_TOWNS) & date_since(ps, "2020-01-01"))
-        .groupBy(
-            "town", F.date_trunc("month", F.col("date")).cast("date").alias("month")
-        )
-        .agg(
-            F.count("*").alias("transactions"),
-            _round0(F.avg("price")).alias("avg_price"),
-        )
-        .transform(_ordered, "town", "month")
-    )
+    return _run(spark, path, Q2_TEXT, "2020-01-01")
 
 
 # --- Q3: YoY window (q3 README.md:57-79) -------------------------------------
@@ -129,14 +124,15 @@ def q2(spark: SparkSession, path: str) -> DataFrame:
 # count, filters date >= 2015-01-01; the outer select rounds for
 # display and LAGs over the unrounded averages.
 
-Q3_SQL = """
+# The window needs no hash exchange over the one coalesced partition.
+Q3_TEXT = """
 WITH yearly AS (
-  SELECT CAST(year(date) AS INTEGER) AS year,
+  SELECT {hint}CAST(year(date) AS INTEGER) AS year,
          type,
          avg(price) AS avg_price_raw,
          count(*) AS transactions
-  FROM property_sales
-  WHERE date >= DATE '2015-01-01'
+  FROM {table}
+  WHERE {since}
   GROUP BY 1, 2
 )
 SELECT year, type,
@@ -151,41 +147,11 @@ FROM yearly
 WINDOW w AS (PARTITION BY type ORDER BY year)
 ORDER BY type, year
 """
+Q3_SQL = _oracle(Q3_TEXT, "2015-01-01")
 
 
 def q3(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path)
-    ps = ps.filter(date_since(ps, "2015-01-01"))
-    # One partition before the window: the per-type window then needs
-    # no hash exchange, and the final sort runs in the same task.
-    yearly = (
-        ps.groupBy(F.year("date").alias("year"), "type")
-        .agg(
-            F.avg("price").alias("avg_price_raw"),
-            F.count("*").alias("transactions"),
-        )
-        .coalesce(1)
-    )
-    w = Window.partitionBy("type").orderBy("year")
-    prev = F.lag("avg_price_raw").over(w)
-    return (
-        yearly.select(
-            "year",
-            "type",
-            _round0(F.col("avg_price_raw")).alias("avg_price"),
-            "transactions",
-            _round0(F.col("avg_price_raw") - prev).alias("yoy_change"),
-            F.round(
-                (F.lit(100.0) * (F.col("avg_price_raw") - prev) / prev).cast(
-                    "decimal(28,6)"
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("yoy_pct"),
-        )
-        .transform(_ordered, "type", "year")
-    )
+    return _run(spark, path, Q3_TEXT, "2015-01-01")
 
 
 # --- Q4: top counties + percentiles (q4 README.md:50-73) ---------------------
@@ -220,43 +186,40 @@ ORDER BY p.county, p.type
 """
 
 
+# One scan (module doc): every (county, type) group in one partition,
+# folded per county so ORDER BY ... LIMIT 10 ranks counties as the
+# lab's CTE does, then unfolded. percentile() is quantile_cont.
+Q4_SPARK = """
+WITH by_type AS (
+  SELECT {hint}county, type,
+         count(*) AS transactions,
+         CAST(round(CAST(avg(price) AS DECIMAL(28,6))) AS DOUBLE) AS avg_price,
+         percentile(price, array(0.25, 0.50, 0.75, 0.95)) AS p
+  FROM {table}
+  WHERE county IS NOT NULL AND {since}
+  GROUP BY county, type
+), top_counties AS (
+  SELECT county, collect_list(struct(type, transactions, avg_price, p)) AS groups
+  FROM by_type
+  GROUP BY county
+  ORDER BY sum(transactions) DESC, county
+  LIMIT 10
+)
+SELECT county,
+       g.type,
+       g.transactions,
+       g.avg_price,
+       CAST(round(CAST(g.p[0] AS DECIMAL(28,6))) AS DOUBLE) AS p25,
+       CAST(round(CAST(g.p[1] AS DECIMAL(28,6))) AS DOUBLE) AS median,
+       CAST(round(CAST(g.p[2] AS DECIMAL(28,6))) AS DOUBLE) AS p75,
+       CAST(round(CAST(g.p[3] AS DECIMAL(28,6))) AS DOUBLE) AS p95
+FROM top_counties LATERAL VIEW explode(groups) AS g
+ORDER BY county, type
+"""
+
+
 def q4(spark: SparkSession, path: str) -> DataFrame:
-    ps = load_property_sales(spark, path)
-    ps = ps.filter(F.col("county").isNotNull() & date_since(ps, "2020-01-01"))
-    top = (
-        ps.groupBy("county")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.desc("cnt"), "county")
-        .limit(10)
-        .select("county")
-    )
-    pcts = F.expr("percentile(price, array(0.25, 0.50, 0.75, 0.95))")
-
-    def pct(i: int) -> Column:
-        return _round0(F.element_at("_p", i))
-
-    return (
-        # top is 10 rows — broadcast, so the fact never shuffles for
-        # the semi-join-shaped restriction.
-        ps.join(F.broadcast(top), "county")
-        .groupBy("county", "type")
-        .agg(
-            F.count("*").alias("transactions"),
-            _round0(F.avg("price")).alias("avg_price"),
-            pcts.alias("_p"),
-        )
-        .select(
-            "county",
-            "type",
-            "transactions",
-            "avg_price",
-            pct(1).alias("p25"),
-            pct(2).alias("median"),
-            pct(3).alias("p75"),
-            pct(4).alias("p95"),
-        )
-        .transform(_ordered, "county", "type")
-    )
+    return _run(spark, path, Q4_SPARK, "2020-01-01")
 
 
 REFERENCE_QUERIES = {

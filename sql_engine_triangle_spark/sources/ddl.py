@@ -70,11 +70,11 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
 
     On first use in a SparkContext the path is registered as an
     EXTERNAL parquet table (``create_external_table``) under a reserved
-    name derived from a hash of the path, in the session's default
-    database, and its partitions are recovered into the catalog. The
-    schema, partition column included, is inferred once, there: a
-    later read runs no schema job, and a file written with other
-    columns is read with the registered ones. Every open then
+    name derived from a hash of the path (``table_name``), in the
+    session's default database, and its partitions are recovered into
+    the catalog. The schema, partition column included, is inferred
+    once, there: a later read runs no schema job, and a file written
+    with other columns is read with the registered ones. Every open then
 
     - lists the root's partition directory names on the driver (one
       readdir) and adds or drops catalog partitions for the names that
@@ -107,7 +107,7 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
             raise
         root = (st.st_dev, st.st_ino)
         if reg is None or reg.root != root:
-            name = "_open_table_" + hashlib.sha1(path.encode()).hexdigest()[:16]
+            name = table_name(path)
             drop_table_if_exists(spark, f"`{name}`")
             names = create_external_table(spark, f"`{name}`", path)
             reg = _TABLES[key] = _Registration(name, root, names)
@@ -115,6 +115,12 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
             _sync_partitions(spark, reg, _partition_dirs(path))
         spark.catalog.refreshTable(reg.name)
         return spark.table(reg.name)
+
+
+def table_name(path: str) -> str:
+    """The catalog name ``open_table`` registers ``path`` under, for
+    SQL text that reads the table ``open_table(spark, path)`` opened."""
+    return "_open_table_" + hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:16]
 
 
 def forget_table(path: str) -> None:

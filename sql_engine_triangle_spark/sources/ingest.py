@@ -13,12 +13,13 @@ within partitions on the query keys (Parquet min/max page/rowgroup
 stats then act as the coarse "index" — SURVEY.md §2.11's B-tree
 mapping).
 
-What prunes month partitions: only a filter built with ``date_since``,
-which adds the implied ``month >= toYYYYMM(day)`` conjunct beside
-``date >= day``; ``queries.reference_parity`` Q1-Q4 use it. Spark
-derives no partition filter from a predicate on ``date`` itself, so
-``Engine.sql`` text and every other date predicate (``<``, ``=``,
-``BETWEEN``, ...) still open every partition.
+What prunes month partitions: only a filter written with
+``date_since_sql``, which adds the implied ``month >= toYYYYMM(day)``
+conjunct beside ``date >= day``; the SQL texts of
+``queries.reference_parity`` Q1-Q4 use it. Spark derives no partition
+filter from a predicate on ``date`` itself, so other ``Engine.sql``
+text and every other date predicate (``<``, ``=``, ``BETWEEN``, ...)
+still open every partition.
 
 What the reference queries read: ``sources.ddl.open_table`` over the
 partitioned path, a catalog table whose partitions the catalog tracks.
@@ -33,6 +34,7 @@ registers it again, other writes must keep the columns.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,7 +97,13 @@ class BadRowBudget:
 def enforce_bad_row_budget(df: DataFrame, budget: BadRowBudget) -> DataFrame:
     """Count corrupt rows against the budget (single aggregate pass),
     raise if exceeded, return the clean rows without the capture
-    column."""
+    column.
+
+    ``df`` is left cached, and the caller owns that cache: it
+    unpersists ``df`` once the clean rows are written. A query that
+    reads only ``_corrupt_record`` off ``df`` (a caller's own bad-row
+    count) is legal only because of it; on an uncached CSV scan Spark
+    raises ``UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN``."""
     # Spark disallows aggregates that reference ONLY the corrupt
     # column straight off a CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
     # — cache the parsed frame first (Spark's documented pattern). At
@@ -162,18 +170,21 @@ def month_col(date: Column) -> Column:
     return yyyymm(date).cast("string").alias("month")
 
 
-def date_since(df: DataFrame, day: str) -> Column:
-    """``date >= day`` on ``df``, plus the implied ``month >=
+def date_since_sql(df: DataFrame, day: str) -> str:
+    """``date >= DATE 'day'`` as SQL text, plus the implied ``month >=
     toYYYYMM(day)`` when ``df`` carries month_col's ``month`` column,
     so a read of a month-partitioned table opens only the partitions
-    from that month on. The implied conjunct drops no row the date
-    predicate keeps: toYYYYMM is monotone in the date, and a NULL date
-    (partition ``__HIVE_DEFAULT_PARTITION__``) fails both."""
-    start = F.lit(day).cast("date")
-    cond = F.col("date") >= start
+    from that month on; over a flat table it is the date predicate
+    alone. The bound is ``yyyymm`` of the day written as SQL, which
+    Spark folds to the constant (``month >= 202001``). The implied
+    conjunct drops no row the date predicate keeps: toYYYYMM is
+    monotone in the date, and a NULL date (partition
+    ``__HIVE_DEFAULT_PARTITION__``) fails both."""
+    start = f"DATE '{date.fromisoformat(day)}'"
+    cond = f"date >= {start}"
     if "month" in df.columns:
-        cond = cond & (F.col("month") >= yyyymm(start))
-    return cond
+        cond += f" AND month >= {yyyymm(F.expr(start))._jc.toString()}"
+    return f"({cond})"
 
 
 def write_partitioned(

@@ -1,9 +1,10 @@
 """Core-query extras beyond the generic registry sweep: approx-sketch
-tolerance (SURVEY.md §5) and SQL-vs-DataFrame entry-point agreement
-(SURVEY.md §3 Entry A ≡ Entry B)."""
+tolerance (SURVEY.md §5) and agreement of the SQL entry points' two
+ways of binding tables (SURVEY.md §3 Entry A ≡ Entry C)."""
 
 from __future__ import annotations
 
+from sql_engine_triangle_spark.engine import Engine
 from sql_engine_triangle_spark.queries import registry
 from tests.conftest import SF_DIR, assert_frames_match
 
@@ -36,9 +37,12 @@ def test_q4_approx_close_to_exact(spark):
     assert rel < 0.05, f"approx p50 off by {rel:.3%}"
 
 
-def test_sql_entry_equals_dataframe_entry(spark):
-    """spark.sql and the DataFrame API build the same logical plan —
-    results must be identical (SURVEY.md §3)."""
-    sql_pdf = registry.get("sql_entry_q1").fn(spark, SF_DIR).toPandas()
-    df_pdf = registry.get("q1_agg_by_type").fn(spark, SF_DIR).toPandas()
-    assert_frames_match(df_pdf, sql_pdf)
+def test_sql_over_views_equals_placeholder_binding(spark):
+    """One text, two binding paths: q1_agg_by_type's text run by
+    ``Engine.sql`` over the Engine's child-session views (Entry A) and
+    by ``Engine.query``, which binds each ``{table}`` placeholder to a
+    frame (Entry C). Both must give the same answer (SURVEY.md §3)."""
+    eng = Engine(spark, SF_DIR)
+    via_views = eng.sql(registry.get("q1_agg_by_type").oracle).toPandas()
+    via_placeholders = eng.query("q1_agg_by_type").toPandas()
+    assert_frames_match(via_placeholders, via_views)

@@ -10,6 +10,7 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from sql_engine_triangle_spark.functions.scalar import best_effort_date
@@ -63,6 +64,21 @@ def test_bad_row_budget_exceeded(spark, csv_path):
     raw = ingest.read_csv_tolerant(spark, csv_path, RAW_COLS)
     with pytest.raises(ValueError, match="bad-row budget"):
         ingest.enforce_bad_row_budget(raw, ingest.BadRowBudget(max_rows=0))
+
+
+def test_budget_leaves_raw_cached_for_a_bad_row_count(spark, csv_path):
+    """The caller owns the cache enforce_bad_row_budget puts on raw:
+    a count of corrupt rows off raw afterwards works only on a cached
+    frame, and equals the bad rows in the file."""
+    raw = ingest.read_csv_tolerant(spark, csv_path, RAW_COLS)
+    try:
+        ingest.enforce_bad_row_budget(raw, ingest.BadRowBudget())
+        assert raw.filter(F.col("_corrupt_record").isNotNull()).count() == 1
+    finally:
+        raw.unpersist()
+    uncached = ingest.read_csv_tolerant(spark, csv_path, RAW_COLS)
+    with pytest.raises(AnalysisException, match="QUERY_ONLY_CORRUPT_RECORD_COLUMN"):
+        uncached.filter(F.col("_corrupt_record").isNotNull()).count()
 
 
 def test_typed_projection_semantics(spark, csv_path):

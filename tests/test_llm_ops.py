@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sql_engine_triangle_spark.catalog import load_table
+from sql_engine_triangle_spark.catalog import load_table, table_path
 from sql_engine_triangle_spark.queries import registry
 from tests.conftest import SF_DIR
 
@@ -239,7 +239,7 @@ def test_ivf_recall_vs_brute_force(spark):
     ivf = {
         r.vec_id
         for r in similarity.ivf_topk(
-            emb, qvec, k=10, exclude_id=0, cache_key=SF_DIR
+            emb, qvec, k=10, exclude_id=0, cache_path=table_path(SF_DIR, "embeddings")
         ).collect()
     }
     assert len(exact) == 10
@@ -255,7 +255,6 @@ def test_ivf_flags_match_direct_computation(spark, tmp_path, seed, recall_ok):
     brute_force_topk and ivf_topk, on a 500-vector corpus whose IVF
     top-10 holds only 6 of the exact 10 (recall FALSE) and on one
     where recall holds."""
-    from sql_engine_triangle_spark.catalog import table_path
     from sql_engine_triangle_spark.fixtures import generate as G
     from sql_engine_triangle_spark.operators import similarity
 
@@ -270,7 +269,7 @@ def test_ivf_flags_match_direct_computation(spark, tmp_path, seed, recall_ok):
     ivf = [
         r.vec_id
         for r in similarity.ivf_topk(
-            emb, qvec, k=10, exclude_id=0, cache_key=sf_dir
+            emb, qvec, k=10, exclude_id=0, cache_path=table_path(sf_dir, "embeddings")
         ).collect()
     ]
     assert (len(set(exact) & set(ivf)) >= 7) is recall_ok
@@ -278,6 +277,27 @@ def test_ivf_flags_match_direct_computation(spark, tmp_path, seed, recall_ok):
     assert [r.vec_id for r in val] == exact
     assert all(r.ivf_recall_ok is recall_ok for r in val)
     assert all(r.ivf_returned_k_ok is (len(ivf) == 10) for r in val)
+
+
+def test_ivf_quantizer_is_rebuilt_after_the_embeddings_are_rewritten(
+    spark, tmp_path, monkeypatch
+):
+    """The cached quantizer is keyed on the embeddings files' version:
+    after a rewrite under the same path, sim_ivf_topk answers as a
+    call with a cold cache does. The first corpus's centroids would
+    find 7 of the second corpus's exact top-10 (recall TRUE), its own
+    find 6."""
+    from sql_engine_triangle_spark.fixtures import generate as G
+    from sql_engine_triangle_spark.operators import similarity
+
+    sf_dir, entry = str(tmp_path), registry.get("sim_ivf_topk")
+    path = table_path(sf_dir, "embeddings")
+    G.embeddings(spark, 500, seed=3).write.parquet(path)
+    entry.fn(spark, sf_dir).collect()
+    G.embeddings(spark, 500, seed=1559667568).write.mode("overwrite").parquet(path)
+    warm = entry.fn(spark, sf_dir).collect()
+    monkeypatch.setattr(similarity, "_CENTROID_CACHE", {})
+    assert warm == entry.fn(spark, sf_dir).collect()
 
 
 def test_lsh_ann_structural(spark):

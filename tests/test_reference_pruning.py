@@ -2,12 +2,12 @@
 the way the lab's ClickHouse table is laid out (``PARTITION BY
 toYYYYMM(date)``): one Hive partition per month, 372 of them.
 
-Pins the plan (every scan carries a ``month`` partition filter, and
-no range exchange orders the small result), the cost of building a
-query frame (schema and partitions come from the catalog, so no Spark
-job once the table is registered), and exactness against DuckDB, row
-order included, on date boundaries, a NULL date and a read right
-after an append."""
+Pins the plan (one scan per query, carrying a ``month`` partition
+filter; no range exchange orders the small result, and Q4 joins no
+broadcast), the cost of building a query frame (schema and partitions
+come from the catalog, so no Spark job once the table is registered),
+and exactness against DuckDB, row order included, on date boundaries,
+a NULL date and a read right after an append."""
 
 from __future__ import annotations
 
@@ -99,7 +99,7 @@ def test_fixture_has_more_partitions_than_the_listing_threshold(monthly_table):
 def test_every_scan_prunes_month_partitions(spark, monthly_table, name):
     fn, _, first_month = QUERIES[name]
     scans = _file_scans(fn(spark, monthly_table))
-    assert len(scans) == (2 if name == "q4" else 1), scans
+    assert len(scans) == 1, scans
     for scan in scans:
         m = re.search(r"PartitionFilters: \[(.*?)\]", scan)
         assert m and re.search(rf"month#\d+ >= {first_month}\b", m.group(1)), scan
@@ -109,6 +109,12 @@ def test_every_scan_prunes_month_partitions(spark, monthly_table, name):
 def test_final_ordering_has_no_range_exchange(spark, monthly_table, name):
     fn = QUERIES[name][0]
     assert "rangepartitioning" not in executed_plan(fn(spark, monthly_table)).lower()
+
+
+def test_q4_ranks_counties_without_a_broadcast(spark, monthly_table):
+    # The lab's top-counties CTE is a join back to the fact; here the
+    # counties are ranked over the one grouped scan.
+    assert "BroadcastExchange" not in executed_plan(rp.q4(spark, monthly_table))
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
