@@ -1283,10 +1283,11 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone.
 
     One IVF pass: its ≤10 ids are collected as a k-row scalar
-    parameter (like the query vector), and both flags are plain
-    expressions over the exact rows — the recall count is an
-    unpartitioned window over the ≤10 rows TakeOrderedAndProject
-    already bounds."""
+    parameter (like the query vector). The exact rows are gathered
+    into one array by a global aggregate over the ≤10 rows
+    TakeOrderedAndProject already bounds; the recall count filters
+    that array, and ``inline`` gives the rows back. No join with the
+    IVF ids and no unpartitioned window."""
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = similarity.query_vector(emb, 0)
     exact = similarity.brute_force_topk(emb, qvec, k=10, exclude_id=0)
@@ -1298,11 +1299,10 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .collect()
     ]
-    n_hit = F.sum(F.col("vec_id").isin(ivf_ids).cast("int")).over(Window.partitionBy())
-    return exact.select(
-        "vec_id",
-        "label",
-        "cos_sim",
+    top = exact.agg(F.collect_list(F.struct("vec_id", "label", "cos_sim")).alias("top"))
+    n_hit = F.size(F.filter("top", lambda r: r["vec_id"].isin(ivf_ids)))
+    return top.select(
+        F.inline("top"),
         (n_hit >= 7).alias("ivf_recall_ok"),
         F.lit(len(ivf_ids) == 10).alias("ivf_returned_k_ok"),
     ).orderBy(F.desc("cos_sim"), "vec_id")

@@ -21,6 +21,16 @@ filter from a predicate on ``date`` itself, so other ``Engine.sql``
 text and every other date predicate (``<``, ``=``, ``BETWEEN``, ...)
 still open every partition.
 
+Parse width: a CSV or JSON-lines batch is read in the file splits the
+session plans, so the tolerant readers take no width option. Under a
+local master ``session.get_spark`` sets the file open cost to 4 MB /
+cores, and a batch of 4 MB or more parses on every core; Spark's 4 MB
+default split a 6 MB batch in 2 on 4 cores. Each split parses whole
+lines (the line a split boundary cuts belongs to the split it starts
+in) and only the first split of a file drops the header, so the rows
+and the bad-row count do not depend on the width
+(``tests/test_ingest.py`` plants malformed lines on the boundaries).
+
 What the reference queries read: ``sources.ddl.open_table`` over the
 partitioned path, a catalog table whose partitions the catalog tracks.
 Each open adds or drops catalog partitions for month directories that
@@ -57,7 +67,8 @@ def read_csv_tolerant(
 ) -> DataFrame:
     """S2: PERMISSIVE CSV read; malformed rows land in
     _corrupt_record instead of failing the job (the lab's
-    input_format_allow_errors_num=1000, README.md:196-199)."""
+    input_format_allow_errors_num=1000, README.md:196-199). The read
+    splits as the session sizes file splits (module docstring)."""
     return (
         spark.read.schema(raw_string_schema(columns))
         .option("header", header)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pandas as pd
@@ -34,6 +35,20 @@ def ddb():
         )
     yield con
     con.close()
+
+
+@contextmanager
+def session_conf(spark, settings: dict[str, str]):
+    """Set runtime SQL confs for the block, then restore the old
+    values. Frames plan when an action runs, so run it in the block."""
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -7,14 +7,17 @@ from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from sql_engine_triangle_spark.functions.scalar import best_effort_date
 from sql_engine_triangle_spark.sources import ingest, introspect
+from tests.conftest import session_conf
 
 RAW_COLS = [
     "uuid_string",
@@ -403,3 +406,153 @@ def test_compact_zorder_variant(spark, tmp_path):
     avg_a = sum(a for a, _ in spans) / len(spans)
     avg_b = sum(b for _, b in spans) / len(spans)
     assert avg_a < 0.8 and avg_b < 0.8, (avg_a, avg_b)
+
+
+# ---------------------------------------------------------------------------
+# Split width and split parity of the tolerant text readers
+# ---------------------------------------------------------------------------
+
+# Every line of a split-parity batch spans LINE_BYTES bytes with its
+# newline, so body line j starts at byte len(header) + j * LINE_BYTES.
+LINE_BYTES = 200
+BATCH_BYTES = 4_200_000
+ONE_SPLIT = {
+    "spark.sql.files.maxPartitionBytes": str(1 << 30),
+    "spark.sql.files.openCostInBytes": str(1 << 30),
+}
+CSV_GOOD = (
+    '"u{i}~","{price}","2021-03-15","SW1A 1AA","T","Y","F","{i}","","HIGH ST",'
+    '"","LONDON","D{d}","GREATER LONDON"'
+)
+# Too few fields, too many fields, a broken quote.
+CSV_BAD = (
+    '"bad-{i}~","185000","2025-03-15"',
+    ",".join(['"x{i}-0~"'] + [f'"x{{i}}-{k}"' for k in range(1, len(RAW_COLS) + 2)]),
+    '"bad-{i}~","oops"unterminated,"notadate"',
+)
+JSONL_GOOD = '{{"doc_id": {i}, "text": "doc ~", "score": {price}}}'
+# Broken syntax, a type mismatch, a truncated record.
+JSONL_BAD = (
+    "{{broken json line {i} ~",
+    '{{"doc_id": "not_a_number", "text": "bad {i} ~", "score": 30}}',
+    '{{"doc_id": {i}, "text": "cut ~',
+)
+
+
+def _fixed_width(line: str) -> str:
+    """``line`` widened at its ``~`` marker to LINE_BYTES - 1 characters."""
+    assert len(line) < LINE_BYTES, line
+    return line.replace("~", "x" * (LINE_BYTES - len(line))) + "\n"
+
+
+def _write_batch(path, header: str, lines: list[str]) -> None:
+    with open(path, "w") as f:
+        f.write(header + "".join(lines))
+
+
+def _split_starts(df) -> list[int]:
+    """Byte offsets where the read's file splits start."""
+    starts = df.select(F.input_file_block_start().alias("s")).distinct()
+    return sorted(r.s for r in starts.collect())
+
+
+def _batch_with_bad_lines_on_splits(spark, path, header: str, good: str, bad, read):
+    """Write a BATCH_BYTES batch of fixed-width lines, then plant the
+    malformed kinds in turn on the two lines around every split start
+    of ``read``'s plan and on every 997th line. Returns the read's
+    partition count and the body line numbers made bad."""
+    n = BATCH_BYTES // LINE_BYTES
+    lines = [_fixed_width(good.format(i=i, price=1000 + i, d=i % 7)) for i in range(n)]
+    _write_batch(path, header, lines)
+    raw = read()
+    width = raw.rdd.getNumPartitions()
+    starts = _split_starts(raw)
+    assert len(starts) == width
+    at = set(range(0, n, 997))
+    for s in starts[1:]:
+        # The line the split start falls in, read by the split before,
+        # and the line after it, the first one this split reads.
+        j = (s - len(header)) // LINE_BYTES
+        at |= {j, j + 1}
+    for k, j in enumerate(sorted(at)):
+        lines[j] = _fixed_width(bad[k % len(bad)].format(i=j))
+    _write_batch(path, header, lines)
+    assert os.path.getsize(path) == len(header) + n * LINE_BYTES
+    return width, at
+
+
+def _audit(spark, raw):
+    """(partitions, rows, bad rows, good rows) of one tolerant read,
+    through the budget the way the ingest path runs it."""
+    parts = raw.rdd.getNumPartitions()
+    try:
+        clean = ingest.enforce_bad_row_budget(raw, ingest.BadRowBudget())
+        good = Counter(map(tuple, clean.collect()))
+        bad = raw.filter(F.col("_corrupt_record").isNotNull()).count()
+        return parts, raw.count(), bad, good
+    finally:
+        raw.unpersist()
+
+
+def _assert_split_parity(spark, read, n_bad):
+    """A one-split read and the session's split read give the same
+    rows and bad-row count; the split read spans every core."""
+    with session_conf(spark, ONE_SPLIT):
+        one = _audit(spark, read())
+    wide = _audit(spark, read())
+    n = BATCH_BYTES // LINE_BYTES
+    assert one[0] == 1
+    assert wide[0] >= spark.sparkContext.defaultParallelism
+    assert one[1:3] == wide[1:3] == (n, n_bad)
+    assert one[3] == wide[3] and sum(wide[3].values()) == n - n_bad
+    return wide[3]
+
+
+def test_csv_split_parity_with_bad_lines_on_boundaries(spark, tmp_path):
+    """Bad-row counts stay exact across split boundaries: each
+    malformed kind sits on the line a split start cuts and on the
+    first line of the next split, and the header is dropped once."""
+    path = str(tmp_path / "batch.csv")
+    header = ",".join(RAW_COLS) + "\n"
+
+    def read():
+        return ingest.read_csv_tolerant(spark, path, RAW_COLS)
+
+    _, at = _batch_with_bad_lines_on_splits(spark, path, header, CSV_GOOD, CSV_BAD, read)
+    good = _assert_split_parity(spark, read, len(at))
+    assert all(row[0] != "uuid_string" for row in good)
+
+
+def test_jsonl_split_parity_with_bad_lines_on_boundaries(spark, tmp_path):
+    path = str(tmp_path / "batch.jsonl")
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("score", LongType()),
+        ]
+    )
+
+    def read():
+        return ingest.read_jsonl_tolerant(spark, path, schema)
+
+    _, at = _batch_with_bad_lines_on_splits(spark, path, "", JSONL_GOOD, JSONL_BAD, read)
+    _assert_split_parity(spark, read, len(at))
+
+
+@pytest.mark.parametrize("kind", ["csv", "jsonl"])
+def test_a_4mb_batch_plans_a_split_per_core(spark, tmp_path, kind):
+    """Under a local master a 4 MB text batch parses on every core
+    (Spark's 4 MB default file open cost planned 2 splits, one of them
+    a few hundred bytes)."""
+    path = str(tmp_path / f"batch.{kind}")
+    good = CSV_GOOD if kind == "csv" else JSONL_GOOD
+    header = ",".join(RAW_COLS) + "\n" if kind == "csv" else ""
+    n = (4 << 20) // LINE_BYTES + 1
+    _write_batch(path, header, [_fixed_width(good.format(i=i, price=i, d=0)) for i in range(n)])
+    assert os.path.getsize(path) >= 4 << 20
+    if kind == "csv":
+        raw = ingest.read_csv_tolerant(spark, path, RAW_COLS)
+    else:
+        raw = ingest.read_jsonl_tolerant(spark, path, StructType([StructField("doc_id", StringType())]))
+    assert raw.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
 from sql_engine_triangle_spark.plans import asserts as pa
 from sql_engine_triangle_spark.queries import registry
 from tests.conftest import SF_DIR
@@ -300,12 +303,34 @@ def test_skew_salted_join_no_nested_loop(spark):
 
 
 def test_ivf_validation_form_has_no_nested_loop(spark):
-    """sim_ivf_topk's flags are expressions over the exact top-10 (the
-    IVF ids enter as a collected k-row parameter), so its plan joins
-    nothing: no broadcast flags frame, no nested loop."""
+    """sim_ivf_topk's flags are literals over the collected exact
+    top-10 (the IVF ids are collected too), so its plan joins nothing:
+    no broadcast flags frame, no nested loop."""
     plan = pa.executed_plan(_q(spark, "sim_ivf_topk"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _unpartitioned_windows(df) -> int:
+    """Window operators of the optimized plan with no partition spec:
+    Spark runs each in one task and logs a warning for it."""
+    nodes, found = [df._jdf.queryExecution().optimizedPlan()], 0
+    while nodes:
+        node = nodes.pop()
+        if node.getClass().getSimpleName() == "Window":
+            found += node.partitionSpec().isEmpty()
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_ivf_validation_form_has_no_unpartitioned_window(spark):
+    """sim_ivf_topk's recall count is taken over the collected exact
+    top-10, not by a window over the whole result."""
+    assert _unpartitioned_windows(_q(spark, "sim_ivf_topk")) == 0
+    # The check sees the form it replaced.
+    df = spark.range(3).select(F.sum("id").over(Window.partitionBy()).alias("n"))
+    assert _unpartitioned_windows(df) == 1
 
 
 ARROW_KERNEL_ENTRIES = (

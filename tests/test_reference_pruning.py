@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 from sql_engine_triangle_spark.fixtures import generate as G
 from sql_engine_triangle_spark.plans.asserts import executed_plan
 from sql_engine_triangle_spark.queries import reference_parity as rp
+from sql_engine_triangle_spark.session import DEFAULT_OPEN_COST
 from sql_engine_triangle_spark.sources.ingest import month_col, write_partitioned
-from tests.conftest import assert_frames_match
+from tests.conftest import assert_frames_match, session_conf
 
 N_ROWS = 20_000
 SEED = 11
@@ -87,6 +88,20 @@ def _file_scans(df) -> list[str]:
     return [ln for ln in executed_plan(df).splitlines() if "FileScan parquet" in ln]
 
 
+def _scan_partitions(df) -> list[int]:
+    """Partitions each FileScan of the executed plan reads in."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    scans = (leaves.apply(i) for i in range(leaves.size()))
+    return [
+        s.inputRDD().getNumPartitions()
+        for s in scans
+        if s.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
 def test_fixture_has_more_partitions_than_the_listing_threshold(monthly_table):
     parts = [d for d in os.listdir(monthly_table) if d.startswith("month=")]
     # 1995-01..2025-12 plus the NULL-date partition; Spark's default
@@ -103,6 +118,41 @@ def test_every_scan_prunes_month_partitions(spark, monthly_table, name):
     for scan in scans:
         m = re.search(r"PartitionFilters: \[(.*?)\]", scan)
         assert m and re.search(rf"month#\d+ >= {first_month}\b", m.group(1)), scan
+
+
+def _default_split_is_capped(path: str, first_month: int, cores: int) -> bool:
+    """Whether Spark's default open cost makes the split size of a scan
+    of the months from ``first_month`` on hit ``maxPartitionBytes``:
+    ``(bytes + files * openCost) / cores`` above 128 MB."""
+    files = [
+        f.stat().st_size
+        for d in os.scandir(path)
+        if d.name.startswith("month=") and d.name[6:].isdigit() and int(d.name[6:]) >= first_month
+        for f in os.scandir(d.path)
+        if f.name.endswith(".parquet")
+    ]
+    return (sum(files) + len(files) * DEFAULT_OPEN_COST) / cores > 128 << 20
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_month_scans_keep_their_partition_count(spark, monthly_table, name):
+    """The local open cost that splits a text batch per core packs the
+    month files into as many partitions as Spark's default open cost
+    does, about one per core. The one exception is a scan whose
+    default split size hits the 128 MB ``maxPartitionBytes`` cap (on 4
+    cores Q3's 132 months weigh 132 x 4 MB): the cap adds a partition
+    beyond the cores, a second wave of one task, and at the local open
+    cost the months pack into no more partitions than that and no
+    fewer than the cores."""
+    fn, _, first_month = QUERIES[name]
+    [local] = _scan_partitions(fn(spark, monthly_table))
+    with session_conf(spark, {"spark.sql.files.openCostInBytes": str(DEFAULT_OPEN_COST)}):
+        [default] = _scan_partitions(fn(spark, monthly_table))
+    cores = spark.sparkContext.defaultParallelism
+    if _default_split_is_capped(monthly_table, first_month, cores):
+        assert cores <= local < default, (local, default)
+    else:
+        assert local == default, (local, default)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
